@@ -61,19 +61,26 @@ object Bench {
     // the session, not that query — measured as q_knn 9.2 s in-suite vs
     // 3.9 s standalone-cold.
     if (!headlineOnly) sources.Images.images(spark, sfDir).count()
-    val results =
-      if (headlineOnly) Map.empty[String, Double]
+    // A query that throws is recorded with its message, never as a time:
+    // Left(msg) for an error, Right(seconds) for a completed query.
+    val results: Map[String, Either[String, Double]] =
+      if (headlineOnly) Map.empty
       else SparkEntry.queries.map { case (name, fn) =>
-        val (_, sec) = time {
-          try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
+        val (outcome, sec) = time {
+          try Right(fn(spark, sfDir).count())
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            Left(String.valueOf(e.getMessage))
+          }
         }
         // Operators persist intermediates (kNN leaves, pyramid levels);
         // dropping them between queries keeps each measurement independent
         // instead of letting storage-memory pressure evict/spill later
         // queries (measured 5x distortion on the set-similarity join).
         spark.catalog.clearCache()
-        name -> sec
+        name -> outcome.map(_ => sec)
       }
+    val errors = results.collect { case (name, Left(_)) => name }
 
     // -------- headline: spatial-join + tile-assignment rows/sec
     // The measured jobs read a pre-materialized parquet image table (the
@@ -123,11 +130,14 @@ object Bench {
     val headlineSec = assignSec + pipSec
     val rowsPerSec = 2.0 * nRows / headlineSec // each job processes nRows
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val qs = results.map {
+      case (k, Right(sec)) => s"${Verify.jsonStr(k)}:$sec"
+      case (k, Left(msg)) =>
+        s"""${Verify.jsonStr(k)}:{"status":"error","msg":${Verify.jsonStr(msg)}}"""
+    }.mkString("{", ",", "}")
+    val total = results.values.collect { case Right(sec) => sec }.sum
     val line =
-      s"""{"metric":"spatial-join + tile-assignment rows/sec","value":$rowsPerSec,"unit":"rows/sec","suite_sec":$total,"queries":$qs,"sf":"$sfDir","cpus":$cpus,"headline":{"rows":$nRows,"replicate":$replicate,"scan_derive_sec":$scanSec,"tile_assign_sec":$assignSec,"pip_join_sec":$pipSec,"rows_per_sec":$rowsPerSec}}"""
+      s"""{"metric":"spatial-join + tile-assignment rows/sec","value":$rowsPerSec,"unit":"rows/sec","suite_sec":$total,"query_errors":${errors.size},"queries":$qs,"sf":"$sfDir","cpus":$cpus,"headline":{"rows":$nRows,"replicate":$replicate,"scan_derive_sec":$scanSec,"tile_assign_sec":$assignSec,"pip_join_sec":$pipSec,"rows_per_sec":$rowsPerSec}}"""
     println(line)
     // The driver captures a fixed-size TAIL of stdout, which truncated the
     // 120-query map in past rounds (VERDICT r4 task 5). Persist the full
@@ -140,5 +150,10 @@ object Bench {
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write $outFile: $e") }
     spark.stop()
+    if (errors.nonEmpty) {
+      System.err.println(s"[bench] ${errors.size} queries failed: " +
+        errors.toSeq.sorted.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -76,9 +76,10 @@ object Queries {
          |FROM (SELECT ${cellSql(7)} AS cell, * FROM images) t
          |GROUP BY cell""".stripMargin))
 
-  /** Full pyramid build 12 -> 5, emitting the res-5 level. The oracle groups
-    * the leaves at res 5 directly, so equality proves the 7-level rollup
-    * chain is exactly associative (partial+final == single pass). */
+  /** The res-5 level of the pyramid with res-12 leaves: each image's
+    * res-12 cell is lifted to its res-5 ancestor by `parentAt`. The oracle
+    * encodes at res 5 directly, so equality proves the grid nests exactly
+    * and the tile summaries are exactly associative. */
   private val qPyramidRes5 = Q(
     "q_pyramid_res5",
     (s, dir) => TilePyramid.levelAt(Images.images(s, dir), 5)
@@ -340,39 +341,37 @@ object Queries {
   private val qRfmSegments = Q(
     "q_rfm_segments",
     (s, dir) => {
-      def metrics = s.read.parquet(s"$dir/events.parquet")
+      // one eager per-user rollup feeds both the bounds and the final
+      // projection, so the event scan and rollup run once
+      val um = s.read.parquet(s"$dir/events.parquet")
         .groupBy(col("user_id"))
         .agg(max(floor(unix_micros(col("ts").cast("timestamp")) /
             lit(86400000000L)).cast("long")).as("r_day"),
           count(lit(1)).as("f"),
           sum(expr("cast(floor(value * 1000) as bigint)")).as("m_milli"))
-      val um = metrics
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (bR, bF, bM) =
+        .localCheckpoint(true)
+      val n = um.count()
+      def bounds(c: String): Seq[Long] = {
+        val h = um.groupBy(col(c).as("x")).agg(count(lit(1)).as("cnt"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val n = um.count()
-          def bounds(c: String): Seq[Long] = {
-            val h = um.groupBy(col(c).as("x")).agg(count(lit(1)).as("cnt"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              val cum = h.as("a").join(
-                  broadcast(h.select(col("x").as("x2"), col("cnt").as("n2"))),
-                  col("x2") <= col("a.x"))
-                .groupBy(col("a.x").as("x")).agg(sum(col("n2")).as("cum"))
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              try (1 to 3).map { k =>
-                val target = (k * n + 3) / 4
-                cum.where(col("cum") >= target)
-                  .agg(min(col("x"))).first().getLong(0)
-              } finally cum.unpersist(blocking = false)
-            } finally h.unpersist(blocking = false)
-          }
-          (bounds("r_day"), bounds("f"), bounds("m_milli"))
-        } finally um.unpersist(blocking = false)
+          val cum = h.as("a").join(
+              broadcast(h.select(col("x").as("x2"), col("cnt").as("n2"))),
+              col("x2") <= col("a.x"))
+            .groupBy(col("a.x").as("x")).agg(sum(col("n2")).as("cum"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try (1 to 3).map { k =>
+            val target = (k * n + 3) / 4
+            cum.where(col("cum") >= target)
+              .agg(min(col("x"))).first().getLong(0)
+          } finally cum.unpersist(blocking = false)
+        } finally h.unpersist(blocking = false)
+      }
+      val (bR, bF, bM) = (bounds("r_day"), bounds("f"), bounds("m_milli"))
       def bucket(c: String, bs: Seq[Long]) =
         lit(1L) + bs.map(bd => when(col(c) > bd, 1L).otherwise(0L))
           .reduce(_ + _)
-      metrics.select(col("user_id"), col("r_day"), col("f"), col("m_milli"),
+      um.select(col("user_id"), col("r_day"), col("f"), col("m_milli"),
         bucket("r_day", bR).as("r_b"), bucket("f", bF).as("f_b"),
         bucket("m_milli", bM).as("m_b"))
     },
@@ -1395,8 +1394,8 @@ object Queries {
     *
     * The slim pyramid is MATERIALIZED (localCheckpoint) before the
     * self-join: adaptiveSplit consumes it twice (tiles + parents), and
-    * lazily each side would rebuild every rollup chain from the leaf —
-    * 66 exchanges with only 4 reused (measured). The pyramid is #cells
+    * lazily each side would re-run the pyramid aggregation from the
+    * images. The pyramid is #cells
     * rows (orders of magnitude under the corpus), so this is exactly the
     * snapshot-materialization a 100 TB run does anyway; both join sides
     * then read the tiny cached frame. */

@@ -28,10 +28,10 @@ object QueriesRetrieval {
   private val CollapseBudget = 400L
 
   /** The three retrieval queries all consume the SAME derived pyramid
-    * (levels 4..8) — materialize the rollup chain once per (session, sf
-    * dir) and share it (the knnRanked pattern): each query then filters
-    * its level range from a 40k-row checkpointed frame instead of
-    * re-running the leaf aggregation + rollup chain. */
+    * (levels 4..8) — materialize it once per (session, sf dir) and share
+    * it (the knnRanked pattern): each query then filters its level range
+    * from a 40k-row checkpointed frame instead of re-running the pyramid
+    * aggregation. */
   private val pyramidCache = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.sql.SparkSession, String),
       org.apache.spark.sql.DataFrame]

@@ -492,6 +492,11 @@ object Snapshot {
     * tiles-relative paths, sorted — the audit listing a maintenance job
     * reviews before [[removeOrphans]] deletes.
     *
+    * Files younger than [[OrphanMinAgeMs]] are never flagged: a version's
+    * data lands before its manifest commits, so a fresh uncommitted file
+    * may belong to a writer still in flight rather than a crashed one
+    * (Iceberg's action guards the same race with its `older_than` cutoff).
+    *
     * Scale shape: pure metadata — one directory walk against the
     * committed-id set; on an object store this is the same LIST +
     * manifest diff Iceberg's action runs, no data IO. */
@@ -499,11 +504,13 @@ object Snapshot {
     val tiles = Paths.get(root, "tiles")
     if (!Files.isDirectory(tiles)) return Seq.empty
     val committed = snapshots(root).map(_._1).toSet
+    val cutoff = System.currentTimeMillis() - OrphanMinAgeMs
     import scala.jdk.CollectionConverters._
     scala.util.Using.resource(Files.walk(tiles)) { s =>
       s.iterator().asScala
         .filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet"))
+          p.getFileName.toString.endsWith(".parquet") &&
+          Files.getLastModifiedTime(p).toMillis < cutoff)
         .filter { p =>
           val comps = tiles.relativize(p).iterator().asScala
             .map(_.toString).toSeq
@@ -518,25 +525,25 @@ object Snapshot {
     }
   }
 
-  /** Delete every [[orphanFiles]] hit (and any directory the deletions
-    * leave empty). Committed data is untouched by construction — the
-    * listing only ever names unreachable files. */
+  /** Minimum age of an [[orphanFiles]] hit: longer than any single
+    * write job's data-to-manifest window. */
+  val OrphanMinAgeMs: Long = 24L * 60 * 60 * 1000
+
+  /** Delete every [[orphanFiles]] hit and the directories those deletions
+    * leave empty. Committed data is untouched by construction — the
+    * listing only ever names unreachable files — and so is any other empty
+    * directory, which may be a concurrent writer's fresh output dir. */
   def removeOrphans(root: String): Seq[String] = {
     val tiles = Paths.get(root, "tiles")
     val victims = orphanFiles(root)
-    victims.foreach(rel => Files.deleteIfExists(tiles.resolve(rel)))
-    // prune now-empty dirs bottom-up (scratch dirs, dead version dirs)
-    import scala.jdk.CollectionConverters._
-    if (Files.isDirectory(tiles))
-      scala.util.Using.resource(Files.walk(tiles)) { s =>
-        s.iterator().asScala.toSeq.reverse
-          .filter(p => Files.isDirectory(p) && p != tiles)
-          .foreach { d =>
-            scala.util.Using.resource(Files.list(d)) { l =>
-              if (!l.iterator().hasNext) Files.delete(d)
-            }
-          }
-      }
+    def isEmptyDir(d: java.nio.file.Path) =
+      scala.util.Using.resource(Files.list(d))(!_.iterator().hasNext)
+    victims.foreach { rel =>
+      val f = tiles.resolve(rel)
+      Files.deleteIfExists(f)
+      var d = f.getParent
+      while (d != tiles && isEmptyDir(d)) { Files.delete(d); d = d.getParent }
+    }
     victims
   }
 
@@ -549,9 +556,13 @@ object Snapshot {
     * One tiny file per ref under `_refs/`; [[setRef]] writes a temp file
     * and ATOMIC_MOVEs it over the name, so readers never observe a torn
     * ref — the same last-writer-wins commit the versioned manifests use.
-    * Refs are metadata-only: retagging touches zero data files. */
+    * Refs are metadata-only: retagging touches zero data files. A ref
+    * can only name a committed snapshot (one with a MANIFEST), so a typo'd
+    * id fails at tagging time instead of at the first pinned read. */
   def setRef(root: String, name: String, snapshotId: String): Unit = {
     require(name.matches("[A-Za-z0-9._-]+"), s"bad ref name: $name")
+    require(Files.exists(Paths.get(s"$root/MANIFEST-$snapshotId.json")),
+      s"snapshot '$snapshotId' is not committed under $root (no manifest)")
     val dir = Paths.get(root, "_refs")
     Files.createDirectories(dir)
     val tmp = Files.createTempFile(dir, s".$name", ".tmp")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -9,9 +9,12 @@ import graft.geo.{QuadkeyTiling, TilingStrategy}
 
 /** Bottom-up tile pyramid — the graft of the reference's recursive
   * cluster-then-summarize tree construction
-  * (raptor/cluster_tree_builder.py:62-205 `construct_tree`): each level is
-  * `groupBy(parent_cell).agg(summary)` of the level below, with an early-stop
-  * guard when a level stops shrinking (≙ cluster_tree_builder.py:143-149).
+  * (raptor/cluster_tree_builder.py:62-205 `construct_tree`). The reference
+  * summarizes one level at a time; here every tile summary is associative,
+  * so all levels come from ONE `groupBy(cell)` over each image's ancestor
+  * cells (the Raptor idea of computing the grid intersection once, applied
+  * to the grid's own hierarchy), with the reference's early-stop guard
+  * when a level stops shrinking (≙ cluster_tree_builder.py:143-149).
   *
   * Tile row schema (≙ `Node`, raptor/tree_structures.py:4-14):
   *   cell: Long (res-tagged grid cell — the node id),
@@ -21,11 +24,10 @@ import graft.geo.{QuadkeyTiling, TilingStrategy}
   *   phash_centroid: Long (≙ parent embedding/centroid).
   *
   * Scale notes (100 TB design):
-  *  - each level is ONE shuffle keyed on the parent cell; partial (map-side)
-  *    aggregation halves traffic because child cells of one parent are
-  *    spatially adjacent and usually co-located in the same input split;
-  *  - levels shrink 4x per step, so the total cost is dominated by the first
-  *    rollup; upper levels are tiny and coalesce via AQE;
+  *  - the whole pyramid is ONE shuffle keyed on the cell; partial
+  *    (map-side) aggregation absorbs the per-level explode because the
+  *    images of one input split share most of their ancestor cells;
+  *  - levels shrink 4x per step, so the leaf level dominates the shuffle;
   *  - hot leaf cells (the skew fixture) are absorbed by partial aggregation:
   *    a million identical-cell rows reduce map-side before shuffling.
   */
@@ -35,13 +37,29 @@ object TilePyramid {
   /** Add the `cell` column at `res` via the codegen'd Catalyst expression
     * (the north_star's batched cell encoding). `strategy` picks the index
     * (quadkey default / S2) — the whole pyramid is index-agnostic because
-    * the rollup key is the strategy's own parent function. */
+    * every level key is the strategy's own parent function. */
   def withCell(images: DataFrame, res: Int,
                strategy: TilingStrategy = QuadkeyTiling): DataFrame =
     images.withColumn("cell", strategy.encodeCol(col("lat"), col("lon"), res))
 
   private def withCentroid(df: DataFrame): DataFrame =
     df.withColumn("phash_centroid", PhashCentroid.centroidCol("phash_bits"))
+
+  /** Tile aggregates over raw image rows: count, bytes and bbox, plus the
+    * 65-slot phash bit state when `full` (the slim form drops it). */
+  private def imageAggs(full: Boolean): Seq[Column] = {
+    val slim = Seq(
+      count(lit(1)).as("cnt"),
+      sum((col("w") * col("h") * 3).cast("long")).as("bytes_sum"),
+      min(col("lat")).as("lat_min"), max(col("lat")).as("lat_max"),
+      min(col("lon")).as("lon_min"), max(col("lon")).as("lon_max"))
+    if (full) slim ++ PhashCentroid.bitSumAggs(col("phash"), "pb") else slim
+  }
+
+  /** Collapse the `pb_*` bit sums of a full aggregation into `phash_bits`
+    * and its centroid. */
+  private def finishFull(agg: DataFrame): DataFrame =
+    withCentroid(PhashCentroid.assembleBits(agg, "pb", "phash_bits"))
 
   /** Leaf tiles: aggregate the image table at `res`. ≙ leaf layer creation +
     * first summarize (raptor/tree_builder.py:286-328 → process_cluster).
@@ -51,43 +69,54 @@ object TilePyramid {
   def leafTiles(images: DataFrame, res: Int = LeafRes,
                 strategy: TilingStrategy = QuadkeyTiling,
                 extraKeys: Seq[String] = Nil): DataFrame = {
-    val aggs = Seq(
-      count(lit(1)).as("cnt"),
-      sum((col("w") * col("h") * 3).cast("long")).as("bytes_sum"),
-      min(col("lat")).as("lat_min"), max(col("lat")).as("lat_max"),
-      min(col("lon")).as("lon_min"), max(col("lon")).as("lon_max")) ++
-      PhashCentroid.bitSumAggs(col("phash"), "pb")
-    withCentroid(
-      PhashCentroid.assembleBits(
-        withCell(images, res, strategy)
-          .groupBy((col("cell") +: extraKeys.map(col)): _*)
-          .agg(aggs.head, aggs.tail: _*), "pb", "phash_bits")
-        .withColumn("res", lit(res)))
+    val aggs = imageAggs(full = true)
+    finishFull(
+      withCell(images, res, strategy)
+        .groupBy((col("cell") +: extraKeys.map(col)): _*)
+        .agg(aggs.head, aggs.tail: _*))
+      .withColumn("res", lit(res))
   }
 
-  /** Literal-free rollup: the target resolution is derived from each row's
-    * own cell (res lives in the top bits — GridCell layout), so EVERY level
-    * generates the identical plan/codegen source. Janino compilation of the
-    * 65-aggregate stage then happens once per build instead of once per
-    * level (measured ~5s/level of pure compile time at sf0.1). */
+  /** Every level in `levels` as ONE keyed aggregation over the images: each
+    * image is encoded once at `leafRes`, exploded to its ancestor cell at
+    * every requested level, and `groupBy(cell)` aggregates the raw image
+    * rows of each tile directly. Every tile summary is associative (long
+    * counts and sums, double min/max, phash bit counts), and the strategy's
+    * `parentAt` equals repeated `parentOnce` for every index, so each row
+    * equals the one a level-by-level [[rollupOnce]] chain produces.
+    *
+    * Scale shape: one shuffle for the whole pyramid, keyed on the cell;
+    * the exploded rows (|levels| per image) are absorbed map-side by
+    * partial aggregation, since an image's ancestors repeat across the
+    * images of one input split. A chain of per-level rollups instead costs
+    * a shuffle per level and, as a lazy union, re-plans the chain prefix
+    * in every branch (O(levels²) operators). `res` is derived from the
+    * cell, so a filter on it stays an integer test on the group key. */
+  private def aggregateLevels(images: DataFrame, levels: Range, leafRes: Int,
+                              strategy: TilingStrategy,
+                              full: Boolean): DataFrame = {
+    require(levels.nonEmpty && levels.last <= leafRes,
+      s"levels $levels must be non-empty and not finer than leaf $leafRes")
+    val aggs = imageAggs(full)
+    val tiles = withCell(images, leafRes, strategy)
+      .withColumn("cell", explode(array(
+        levels.map(r => strategy.parentAtCol(col("cell"), r)): _*)))
+      .groupBy(col("cell"))
+      .agg(aggs.head, aggs.tail: _*)
+    (if (full) finishFull(tiles) else tiles)
+      .withColumn("res", strategy.resCol(col("cell")))
+  }
+
+  /** Literal-free rollup one level up: the target resolution is derived
+    * from each row's own cell (res lives in the top bits — GridCell
+    * layout), so every application generates the identical plan. Used by
+    * the incremental maintenance paths, which re-aggregate stored tiles
+    * rather than images. */
   def rollupOnce(tiles: DataFrame): DataFrame = rollupOnce(tiles, QuadkeyTiling)
 
-  def rollupOnce(tiles: DataFrame, strategy: TilingStrategy): DataFrame = {
-    val aggs = Seq(
-      sum(col("cnt")).as("cnt"),
-      sum(col("bytes_sum")).as("bytes_sum"),
-      min(col("lat_min")).as("lat_min"), max(col("lat_max")).as("lat_max"),
-      min(col("lon_min")).as("lon_min"), max(col("lon_max")).as("lon_max")) ++
-      PhashCentroid.bitMergeAggs(col("phash_bits"), "pb")
-    withCentroid(
-      PhashCentroid.assembleBits(
-        tiles
-          .withColumn("parent", strategy.parentOnceCol(col("cell")))
-          .groupBy(col("parent"))
-          .agg(aggs.head, aggs.tail: _*), "pb", "phash_bits")
-        .withColumnRenamed("parent", "cell")
-        .withColumn("res", strategy.resCol(col("cell"))))
-  }
+  def rollupOnce(tiles: DataFrame, strategy: TilingStrategy): DataFrame =
+    combineByCell(
+      tiles.withColumn("cell", strategy.parentOnceCol(col("cell"))), strategy)
 
   /** Combine tile rows sharing the SAME cell — the delta-merge combiner:
     * identical aggregate algebra to [[rollupOnce]] (every tile summary is
@@ -102,41 +131,23 @@ object TilePyramid {
       min(col("lat_min")).as("lat_min"), max(col("lat_max")).as("lat_max"),
       min(col("lon_min")).as("lon_min"), max(col("lon_max")).as("lon_max")) ++
       PhashCentroid.bitMergeAggs(col("phash_bits"), "pb")
-    withCentroid(
-      PhashCentroid.assembleBits(
-        tiles.groupBy(col("cell")).agg(aggs.head, aggs.tail: _*),
-        "pb", "phash_bits")
-        .withColumn("res", strategy.resCol(col("cell"))))
+    finishFull(tiles.groupBy(col("cell")).agg(aggs.head, aggs.tail: _*))
+      .withColumn("res", strategy.resCol(col("cell")))
   }
 
-  /** Build the full pyramid `minRes..maxRes` as one DataFrame (union of
-    * levels). Each level is persisted before deriving the next so the chain
-    * of shuffles is linear, not exponential; the driver-side loop guard is
-    * the reference's early-stop (cluster_tree_builder.py:143-149).
-    * Returns (pyramid, per-level row counts coarse->fine). */
+  /** Build the full pyramid `minRes..maxRes` as one persisted DataFrame
+    * (one aggregation, see [[aggregateLevels]]) and count its levels from
+    * the cache, so a later [[Snapshot.write]] scans the cache instead of
+    * re-aggregating. The early stop (≙ cluster_tree_builder.py:143-149)
+    * drops every level coarser than the first non-reducing (<= 1 cell)
+    * level. Returns (pyramid, per-level row counts). */
   def build(images: DataFrame, minRes: Int = 4, maxRes: Int = LeafRes,
             strategy: TilingStrategy = QuadkeyTiling)
       : (DataFrame, Map[Int, Long]) = {
-    // Persist ONLY the expensive leaf aggregation; the upper rollups are
-    // tiny and literal-free, so the lazily-chained union needs one codegen
-    // compile and Catalyst's ReuseExchange dedups the shared shuffle
-    // subplans across union branches (level k's chain prefix == level k+1's
-    // whole plan). Per-level counts come from ONE job instead of a
-    // materialize+count barrier per level (was ~5s/level of fixed cost).
-    val leaf = leafTiles(images, maxRes, strategy)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var all = leaf
-    var level = leaf
-    var res = maxRes
-    while (res > minRes) {
-      level = rollupOnce(level, strategy)
-      all = all.unionByName(level)
-      res -= 1
-    }
+    val all = aggregateLevels(images, minRes to maxRes, maxRes, strategy,
+      full = true).persist(StorageLevel.MEMORY_AND_DISK)
     val counts = all.groupBy(col("res")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // early-stop semantics (≙ cluster_tree_builder.py:143-149): levels
-    // coarser than the first non-reducing (<= 1 cell) level are dropped.
     val tiny = counts.filter { case (r, n) => r < maxRes && n <= 1 }.keys
     if (tiny.isEmpty) (all, counts)
     else {
@@ -145,78 +156,25 @@ object TilePyramid {
     }
   }
 
-  /** Single level at `res`: straight rollup chain from the leaves, no
-    * union, no per-level materialization — one linear job. The query-side
-    * fast path when only one (or a contiguous slice of) level is needed;
-    * [[build]] remains the instrumented path (counts + early stop). */
+  /** Single level at `res` of the pyramid whose leaves are at `maxRes`:
+    * one aggregation keyed on each image's `res` ancestor, no counts and
+    * no persist (the query-side path; [[build]] is the instrumented one). */
   def levelAt(images: DataFrame, res: Int, maxRes: Int = LeafRes,
-              strategy: TilingStrategy = QuadkeyTiling): DataFrame = {
-    var level = leafTiles(images, maxRes, strategy)
-    var r = maxRes
-    while (r > res) { level = rollupOnce(level, strategy); r -= 1 }
-    level
-  }
+              strategy: TilingStrategy = QuadkeyTiling): DataFrame =
+    aggregateLevels(images, res to res, maxRes, strategy, full = true)
 
-  /** Lazy union of levels minRes..maxRes (no counts, no persist): the
-    * leaf aggregation subplan is identical across branches, so Catalyst's
-    * ReuseExchange computes it once. */
+  /** Lazy pyramid of levels minRes..maxRes (no counts, no persist). */
   def pyramidLazy(images: DataFrame, minRes: Int, maxRes: Int = LeafRes,
-                  strategy: TilingStrategy = QuadkeyTiling): DataFrame = {
-    var level = leafTiles(images, maxRes, strategy)
-    var all = level
-    var r = maxRes
-    while (r > minRes) {
-      level = rollupOnce(level, strategy)
-      all = all.unionByName(level)
-      r -= 1
-    }
-    all
-  }
+                  strategy: TilingStrategy = QuadkeyTiling): DataFrame =
+    aggregateLevels(images, minRes to maxRes, maxRes, strategy, full = true)
 
   /** SLIM pyramid (count/bytes/bbox only — no phash centroid state): the
-    * retrieval queries never read the centroid, and the full rollup's
-    * 65-column aggregate state is most of its cost; the slim union is the
-    * same shape at 7 aggregate columns. Aggregation is associative, so
-    * every value equals the full pyramid's corresponding column.
-    *
-    * Unlike [[rollupOnce]], `res` here is a LITERAL per level, not
-    * `resCol(cell)`: consumers of the slim pyramid filter on `res`
-    * (adaptiveSplit filters BOTH join sides), and a literal lets the
-    * pushed-down filter constant-fold to true/false per union branch —
-    * pruning whole branches — where the expression form collapses into
-    * the full encode/parent chain inside each branch's pushed Filter
-    * (measured: a 49 KB single Filter expression that blew whole-stage
-    * codegen past janino's 64 KB method limit and fell back to
-    * interpreted). The compile-once rationale of the literal-free full
-    * rollup doesn't transfer: the slim agg is 7 columns, so the ~5
-    * per-level codegen variants are cheap to compile. */
+    * retrieval queries never read the centroid, and the 65-column phash
+    * state is most of the full aggregation's cost. Every value equals the
+    * full pyramid's corresponding column. */
   def pyramidLazySlim(images: DataFrame, minRes: Int, maxRes: Int = LeafRes,
-                      strategy: TilingStrategy = QuadkeyTiling): DataFrame = {
-    def slimRollup(tiles: DataFrame, resOut: Int): DataFrame =
-      tiles.withColumn("parent", strategy.parentOnceCol(col("cell")))
-        .groupBy(col("parent"))
-        .agg(sum(col("cnt")).as("cnt"),
-          sum(col("bytes_sum")).as("bytes_sum"),
-          min(col("lat_min")).as("lat_min"), max(col("lat_max")).as("lat_max"),
-          min(col("lon_min")).as("lon_min"), max(col("lon_max")).as("lon_max"))
-        .withColumnRenamed("parent", "cell")
-        .withColumn("res", lit(resOut))
-    var level = withCell(images, maxRes, strategy)
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("cnt"),
-        sum((col("w") * col("h") * 3).cast("long")).as("bytes_sum"),
-        min(col("lat")).as("lat_min"), max(col("lat")).as("lat_max"),
-        min(col("lon")).as("lon_min"), max(col("lon")).as("lon_max"))
-      .withColumn("res", lit(maxRes))
-    var all = level
-    var r = maxRes
-    while (r > minRes) {
-      level = slimRollup(level, r - 1)
-      all = all.unionByName(level)
-      r -= 1
-    }
-    all
-  }
+                      strategy: TilingStrategy = QuadkeyTiling): DataFrame =
+    aggregateLevels(images, minRes to maxRes, maxRes, strategy, full = false)
 
   /** Variable-depth pyramid by budget — the reference's oversize-cluster
     * recursive re-clustering (cluster_utils.py:186-196: clusters exceeding

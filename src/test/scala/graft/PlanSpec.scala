@@ -52,6 +52,17 @@ class PlanSpec extends SparkFunSuite {
       "rollup must shuffle on the cell key")
   }
 
+  test("pyramid: every level from one aggregation, one cell exchange") {
+    // a per-level rollup chain plans one exchange per level (and, as a
+    // lazy union, O(levels^2) of them before reuse). The projected input
+    // keeps a pyramid cached by an earlier suite (build(images, 4, 12))
+    // from being substituted into the plan.
+    val plan = planOf(TilePyramid.pyramidLazy(
+      imgs.select("lat", "lon", "w", "h", "phash"), 4, 12))
+    assert("Exchange hashpartitioning\\(cell".r.findAllIn(plan).length == 1,
+      s"the pyramid must shuffle once, on the cell key:\n$plan")
+  }
+
   test("kNN candidate join broadcasts the exploded query side") {
     // Build just the candidate-join stage the iterative loop uses.
     val qs = Fixtures.knnQueries(spark)

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.geo.{functions => G, S2Cell, S2Tiling}
+import graft.geo.{functions => G, HexTiling, QuadkeyTiling, S2Cell,
+  S2Tiling, TilingStrategy}
 import graft.operators.{Retrieval, TilePyramid}
 import graft.sources.{Fixtures, Images}
 
@@ -10,6 +12,56 @@ import graft.sources.{Fixtures, Images}
   * index-agnostic (groupBy(parent-of-cell)), so swapping the cell function
   * must conserve totals and respect containment. */
 class S2PyramidSpec extends SparkFunSuite {
+
+  /** Reference pyramid, collected as `cols` rows: leaf tiles, then one
+    * [[TilePyramid.rollupOnce]] per level, with the early stop dropping
+    * every level coarser than the finest non-leaf level of <= 1 cell. */
+  private def chainPyramid(imgs: DataFrame, lo: Int, hi: Int,
+                           strategy: TilingStrategy, cols: Seq[String])
+      : (Seq[Row], Map[Int, Long]) = {
+    val levels = (hi until lo by -1).scanLeft(
+      TilePyramid.leafTiles(imgs, hi, strategy))(
+      (level, _) => TilePyramid.rollupOnce(level, strategy))
+    val all = levels.reduce(_.unionByName(_))
+      .select(cols.map(col): _*).collect().toSeq
+    val counts = all.groupBy(_.getAs[Int]("res"))
+      .map { case (r, rs) => r -> rs.size.toLong }
+    val rStop = counts.collect { case (r, n) if r < hi && n <= 1 => r }
+      .maxOption.getOrElse(lo)
+    (all.filter(_.getAs[Int]("res") >= rStop), counts.filter(_._1 >= rStop))
+  }
+
+  /** Every column of every row, in a stable order. */
+  private def canon(rows: Seq[Row]): Seq[String] =
+    rows.map(_.mkString("|")).sorted
+
+  test("build == leafTiles + rollupOnce chain on every column, for the " +
+      "quadkey, S2 and hex strategies, early stop included; the slim " +
+      "pyramid is the full one's slim columns") {
+    val all = Images.images(spark, SparkSpec.Sf)
+    // the planted hot cluster (k % 20 == 0) spans 0.001 deg: one cell at
+    // every level, so every level under the leaf is non-reducing
+    val hot = all.filter(col("k") % 20 === 0)
+    val cases = Seq((all, QuadkeyTiling, 9, 12), (all, S2Tiling, 8, 10),
+      (all, HexTiling, 6, 8), (hot, QuadkeyTiling, 9, 12))
+    val built = cases.map { case (imgs, strategy, lo, hi) =>
+      val what = s"${strategy.name} $lo..$hi"
+      val (pyr, counts) = TilePyramid.build(imgs, lo, hi, strategy)
+      val cols = pyr.columns.toSeq
+      val got = pyr.collect().toSeq
+      val (want, wantCounts) = chainPyramid(imgs, lo, hi, strategy, cols)
+      assert(counts == wantCounts, what)
+      assert(canon(got) == canon(want), what)
+      val slim = TilePyramid.pyramidLazySlim(imgs, lo, hi, strategy)
+        .filter(col("res").isin(counts.keys.toSeq: _*))
+      val slimCols = slim.columns.toSeq
+      assert(canon(slim.collect().toSeq) ==
+        canon(got.map(r => Row.fromSeq(slimCols.map(c => r.getAs[Any](c))))),
+        what)
+      counts
+    }
+    assert(built.last == Map(11 -> 1L, 12 -> 1L), "hot cluster: early stop")
+  }
 
   test("s2 rollup chain conserves counts and parents contain children") {
     val imgs = Images.images(spark, SparkSpec.Sf)

@@ -355,6 +355,12 @@ class SnapshotSpec extends SparkFunSuite {
     intercept[IllegalArgumentException] {
       Snapshot.setRef(root, "bad/name", "v1")
     }
+    // a ref can only name a committed snapshot: a typo'd id is refused
+    // and the existing pin is left as it was
+    intercept[IllegalArgumentException] {
+      Snapshot.setRef(root, "stable", "v3")
+    }
+    assert(Snapshot.resolveRef(root, "stable") == "v2")
     Snapshot.deleteRecursively(java.nio.file.Paths.get(root))
   }
 
@@ -374,6 +380,14 @@ class SnapshotSpec extends SparkFunSuite {
     val scratch = java.nio.file.Paths.get(root, "tiles", ".compact-res=6")
     Files.createDirectories(scratch)
     Files.write(scratch.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
+    // fresh uncommitted files may be a writer still in flight: not orphans
+    // until they are older than the safety age
+    assert(Snapshot.orphanFiles(root).isEmpty, "fresh files flagged")
+    val old = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - Snapshot.OrphanMinAgeMs - 60000L)
+    scala.util.Using.resource(Files.walk(java.nio.file.Paths.get(root))) {
+      _.filter(Files.isRegularFile(_)).forEach(Files.setLastModifiedTime(_, old))
+    }
     val orphans = Snapshot.orphanFiles(root)
     assert(orphans.nonEmpty)
     assert(orphans.forall(p =>
