@@ -727,15 +727,16 @@ object Queries {
 
   /** The AkNN edge list (k=3, res 8) feeds FOUR queries — q_knn_join,
     * q_mutual_knn, q_pagerank, q_label_prop — and its hot-cell join is
-    * the single most expensive derivation in the suite (8.6 s at sf0.1
-    * even after the salted+TopK rewrite); same memo contract as
-    * [[knnRanked]]. */
+    * the single most expensive derivation in the suite (131.9 s for
+    * q_knn_join at sf0.1 in the `graft.Bench` suite, `BENCH_r05.json`, even
+    * after the salted+TopK rewrite); same memo contract as [[knnRanked]]
+    * ([[Knn.knnSelfJoin]] returns its result already checkpointed). */
   private val aknnCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private[graft] def aknnRanked(s: SparkSession, dir: String): DataFrame = {
     if (aknnCache.size > 8) aknnCache.clear()
     aknnCache.getOrElseUpdate((s, dir),
-      Knn.knnSelfJoin(Images.images(s, dir), 3, 8).localCheckpoint(true))
+      Knn.knnSelfJoin(Images.images(s, dir), 3, 8))
   }
 
   /** The res-8 leaf-tile table is the input of FOUR queries

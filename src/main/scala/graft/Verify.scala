@@ -34,23 +34,35 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     def keep(name: String) = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try {
-        // repartition(1), not coalesce(1): coalesce collapses the WHOLE
-        // query to one task; repartition keeps the query parallel and
-        // serializes only the final dump through the single writer
-        fn(spark, sfDir).repartition(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        System.err.println(s"[verify] $name dumped")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    // a query that throws is recorded, not skipped: failures.json names
+    // it with its message and the run exits 1
+    val failures = SparkEntry.queries.filter(kv => keep(kv._1)).flatMap {
+      case (name, fn) =>
+        try {
+          // repartition(1), not coalesce(1): coalesce collapses the WHOLE
+          // query to one task; repartition keeps the query parallel and
+          // serializes only the final dump through the single writer
+          fn(spark, sfDir).repartition(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          System.err.println(s"[verify] $name dumped")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> String.valueOf(e.getMessage))
+        }
     }
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def jsonObj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
+        .mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      jsonObj(SparkEntry.oracleSql.filter(kv => keep(kv._1))))
+    Files.writeString(Paths.get(s"$outDir/failures.json"), jsonObj(failures))
     spark.stop()
+    if (failures.nonEmpty) {
+      System.err.println(s"[verify] ${failures.size} queries failed: " +
+        failures.map(_._1).toSeq.sorted.mkString(", "))
+      sys.exit(1)
+    }
   }
 
   /** JSON string literal: backslash, quote, and ALL control chars (<0x20)

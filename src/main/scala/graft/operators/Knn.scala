@@ -180,21 +180,45 @@ object Knn {
     *  - the per-query top-k is [[graft.agg.TopK]], an ObjectHashAggregate
     *    that reduces each task's candidates to ≤ k rows per query BEFORE
     *    the shuffle — the exchange carries |queries| × partials × k rows
-    *    however many pairs the join emits (158 s → 8.6 s at sf0.1).
-    * Output is row-for-row the window form (same (d2, nid) tie-break). */
+    *    however many pairs the join emits. At sf0.1 this measured
+    *    158 s → 8.6 s in a local round-5 run (no artifact kept),
+    *    while the `graft.Bench` suite recorded 131.9 s for q_knn_join
+    *    at local[32] (`BENCH_r05.json`), so the local figure does not
+    *    carry over to that host.
+    * Output is row-for-row the window form (same (d2, nid) tie-break).
+    *
+    * The top-k needs `objectHashAggregate.sortBased.fallbackThreshold`
+    * raised (see below); it is set only while the result is computed and
+    * restored after, so the returned frame is eagerly `localCheckpoint`ed
+    * and the caller's session conf is left as it was. */
   def knnSelfJoin(images: DataFrame, k: Int,
                   res: Int = DefaultRes,
                   hotThreshold: Long = 4096, salts: Int = 32): DataFrame = {
-    import graft.geo.{functions => G}
     // ObjectHashAggregate falls back to SORT-BASED aggregation after 128
     // distinct groups per partition (spark.sql.objectHashAggregate.
     // sortBased.fallbackThreshold) — with |queries| groups that would sort
     // every candidate pair and forfeit the map-side reduction this plan
     // exists for. A query-keyed top-k buffer is k tuples, so millions of
     // in-memory groups are fine.
-    images.sparkSession.conf.set(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      (1 << 24).toString)
+    val conf = images.sparkSession.conf
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val prior = conf.getAll.get(key) // None when unset (getOption reads the default)
+    conf.set(key, (1 << 24).toString)
+    try selfJoinPlan(images, k, res, hotThreshold, salts).localCheckpoint(true)
+    finally prior match {
+      case Some(v) => conf.set(key, v)
+      case None => conf.unset(key)
+    }
+  }
+
+  /** The lazy plan behind [[knnSelfJoin]] (its binned input and hot-cell
+    * histogram are checkpointed, the join and top-k are not). Run it only
+    * under the raised fallback threshold; outside [[knnSelfJoin]] it is
+    * for plan audits. */
+  private[graft] def selfJoinPlan(images: DataFrame, k: Int, res: Int,
+                                  hotThreshold: Long,
+                                  salts: Int): DataFrame = {
+    import graft.geo.{functions => G}
     val b = images.select(col("image_id"),
       floor(col("lat") * lit(1000000)).cast("long").as("mlat"),
       floor(col("lon") * lit(1000000)).cast("long").as("mlon"),

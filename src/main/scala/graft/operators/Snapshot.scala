@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.agg.LevelCounts
+
 /** Snapshot checkpointing + resume for the tile pyramid — the graft of the
   * reference's pickle save/load + rebuild-from-leaves maintenance path
   * (raptor/RetrievalAugmentation.py:435-440 save, 260-268 load;
@@ -23,27 +25,24 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: the write is partitioned by `res` so any later read of one
   * level is partition-pruned (≙ `layer_to_nodes`, SURVEY.md §1.2); resume
-  * reads ONLY the leaf partition and re-runs the rollup chain — upper
-  * levels are never re-read, matching transform_tree's discard-and-rebuild.
+  * reads ONLY the leaf partition and re-aggregates the upper levels from
+  * it — upper levels are never re-read, matching transform_tree's
+  * discard-and-rebuild.
   */
 object Snapshot {
 
   val LineageCols: Seq[String] = Seq("snapshot_id", "build_ts", "src_partition")
 
-  /** Resolutions the single-pass manifest metrics cover (0..30 spans both
-    * strategies: quadkey uses 0..12, S2 levels reach 30). Levels outside
-    * the range do not fail the write — they fall back to a post-write
-    * count (correct, just not single-pass). */
-  private val ResRange = 0 to 30
-
   /** Write a pyramid DataFrame (schema of [[TilePyramid.build]]) as a new
     * snapshot under `root`. Returns the per-level row counts recorded in
     * the manifest.
     *
-    * Manifest counts ride the WRITE job itself via `observe` metrics (one
-    * count_if per possible level) — a single pass over the data; the
-    * round-2 shape re-read the freshly written snapshot to count it,
-    * doubling write-path IO at scale. */
+    * Manifest counts ride the WRITE job itself as ONE `observe` metric, a
+    * [[LevelCounts]] aggregate (rows per level 0..30 plus an out-of-range
+    * slot) — a single pass over the data; the round-2 shape re-read the
+    * freshly written snapshot to count it, doubling write-path IO at
+    * scale. Levels outside 0..30 do not fail the write: they fall back to
+    * a post-write count (correct, just not single-pass). */
   def write(pyramid: DataFrame, root: String, snapshotId: String,
             buildTs: Long): Map[Int, Long] =
     writeWith(pyramid, root, snapshotId, buildTs,
@@ -58,26 +57,14 @@ object Snapshot {
       .withColumn("build_ts", lit(buildTs))
       .withColumn("src_partition", spark_partition_id())
     val obs = org.apache.spark.sql.Observation(s"snap-$snapshotId-$buildTs")
-    val metrics = ResRange.map(r =>
-      coalesce(sum(when(col("res") === r, 1L).otherwise(0L)), lit(0L))
-        .as(s"c$r")) :+
-      coalesce(sum(when(
-        col("res") < ResRange.head || col("res") > ResRange.last, 1L)
-        .otherwise(0L)), lit(0L)).as("c_other")
-    withLineage.observe(obs, metrics.head, metrics.tail: _*)
+    withLineage.observe(obs, LevelCounts.of(col("res")).as("levels"))
       .write.mode(mode).partitionBy(partCols: _*)
       .parquet(s"$root/tiles")
-    val got = obs.get
-    val counts =
-      if (got("c_other").asInstanceOf[Long] == 0L)
-        ResRange.flatMap { r =>
-          val n = got(s"c$r").asInstanceOf[Long]
-          if (n > 0) Some(r -> n) else None
-        }.toMap
-      else // exotic levels: graceful fallback to counting what was written
+    val counts = LevelCounts.toMap(obs.get("levels").asInstanceOf[Seq[Long]])
+      .getOrElse( // exotic levels: graceful fallback to counting what was written
         withLineage.sparkSession.read.parquet(recountRoot)
           .groupBy(col("res")).count()
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
     val levels = counts.keys.toSeq.sorted
     val json = levels.map(r => s""""$r": ${counts(r)}""").mkString(
       s"""{"snapshot_id": "$snapshotId", "build_ts": $buildTs, "levels": {""",
@@ -99,7 +86,7 @@ object Snapshot {
     *   <root>/MANIFEST-<id>.json
     *
     * The manifest counts ride the write job via the same single-pass
-    * `observe` metrics as [[write]]. */
+    * `observe` metric as [[write]]. */
   def writeVersioned(pyramid: DataFrame, root: String, snapshotId: String,
                      buildTs: Long): Map[Int, Long] =
     writeVersionedPartitioned(pyramid, root, snapshotId, buildTs, Nil)
@@ -612,22 +599,16 @@ object Snapshot {
     read(spark, root).filter(col("res") === res)
 
   /** Resume: read ONLY the leaf level of a snapshot and rebuild all upper
-    * levels `minRes..leafRes-1` with the same rollup chain
+    * levels `minRes..leafRes-1` from it
     * (≙ transform_tree.py:58-119: keep layer 0, reconstruct the rest).
-    * Returns the rebuilt pyramid INCLUDING the leaves. */
+    * Every upper level comes from one combine over the leaf tiles
+    * re-keyed to their ancestors ([[TilePyramid.pyramidFromLeaves]]): one
+    * cell shuffle, not one per level. Returns the rebuilt pyramid
+    * INCLUDING the leaves. */
   def rebuildFromLeaves(spark: SparkSession, root: String, leafRes: Int,
-                        minRes: Int): DataFrame = {
-    val leaves = level(spark, root, leafRes).drop(LineageCols: _*)
-    var all = leaves
-    var cur = leaves
-    var res = leafRes
-    while (res > minRes) {
-      cur = TilePyramid.rollupOnce(cur)
-      all = all.unionByName(cur)
-      res -= 1
-    }
-    all
-  }
+                        minRes: Int): DataFrame =
+    TilePyramid.pyramidFromLeaves(
+      level(spark, root, leafRes).drop(LineageCols: _*), minRes, leafRes)
 
   /** INCREMENTAL pyramid maintenance — fold a DELTA corpus into an
     * existing snapshot WITHOUT a full rebuild (the batch counterpart of

@@ -53,13 +53,9 @@ object TilePyramid {
       sum((col("w") * col("h") * 3).cast("long")).as("bytes_sum"),
       min(col("lat")).as("lat_min"), max(col("lat")).as("lat_max"),
       min(col("lon")).as("lon_min"), max(col("lon")).as("lon_max"))
-    if (full) slim ++ PhashCentroid.bitSumAggs(col("phash"), "pb") else slim
+    if (full) slim :+ PhashCentroid.bitsOf(col("phash")).as("phash_bits")
+    else slim
   }
-
-  /** Collapse the `pb_*` bit sums of a full aggregation into `phash_bits`
-    * and its centroid. */
-  private def finishFull(agg: DataFrame): DataFrame =
-    withCentroid(PhashCentroid.assembleBits(agg, "pb", "phash_bits"))
 
   /** Leaf tiles: aggregate the image table at `res`. ≙ leaf layer creation +
     * first summarize (raptor/tree_builder.py:286-328 → process_cluster).
@@ -70,7 +66,7 @@ object TilePyramid {
                 strategy: TilingStrategy = QuadkeyTiling,
                 extraKeys: Seq[String] = Nil): DataFrame = {
     val aggs = imageAggs(full = true)
-    finishFull(
+    withCentroid(
       withCell(images, res, strategy)
         .groupBy((col("cell") +: extraKeys.map(col)): _*)
         .agg(aggs.head, aggs.tail: _*))
@@ -103,7 +99,7 @@ object TilePyramid {
         levels.map(r => strategy.parentAtCol(col("cell"), r)): _*)))
       .groupBy(col("cell"))
       .agg(aggs.head, aggs.tail: _*)
-    (if (full) finishFull(tiles) else tiles)
+    (if (full) withCentroid(tiles) else tiles)
       .withColumn("res", strategy.resCol(col("cell")))
   }
 
@@ -129,11 +125,25 @@ object TilePyramid {
       sum(col("cnt")).as("cnt"),
       sum(col("bytes_sum")).as("bytes_sum"),
       min(col("lat_min")).as("lat_min"), max(col("lat_max")).as("lat_max"),
-      min(col("lon_min")).as("lon_min"), max(col("lon_max")).as("lon_max")) ++
-      PhashCentroid.bitMergeAggs(col("phash_bits"), "pb")
-    finishFull(tiles.groupBy(col("cell")).agg(aggs.head, aggs.tail: _*))
+      min(col("lon_min")).as("lon_min"), max(col("lon_max")).as("lon_max"),
+      PhashCentroid.mergeBits(col("phash_bits")).as("phash_bits"))
+    withCentroid(tiles.groupBy(col("cell")).agg(aggs.head, aggs.tail: _*))
       .withColumn("res", strategy.resCol(col("cell")))
   }
+
+  /** The quadkey pyramid `minRes..leafRes` over stored quadkey leaf tiles
+    * at `leafRes`: the leaves, unchanged, plus every upper level from ONE
+    * [[combineByCell]] over the leaf rows re-keyed to their ancestor at
+    * each level (the [[aggregateLevels]] shape over tiles instead of
+    * images: one cell shuffle, where a [[rollupOnce]] chain costs one per
+    * level). Equal to that chain, since every tile summary is
+    * associative. Used by the resume and streaming paths. */
+  def pyramidFromLeaves(leaves: DataFrame, minRes: Int,
+                        leafRes: Int): DataFrame =
+    if (minRes >= leafRes) leaves
+    else leaves.unionByName(combineByCell(
+      leaves.withColumn("cell", explode(array((minRes until leafRes).map(r =>
+        QuadkeyTiling.parentAtCol(col("cell"), r)): _*)))))
 
   /** Build the full pyramid `minRes..maxRes` as one persisted DataFrame
     * (one aggregation, see [[aggregateLevels]]) and count its levels from
@@ -169,7 +179,7 @@ object TilePyramid {
     aggregateLevels(images, minRes to maxRes, maxRes, strategy, full = true)
 
   /** SLIM pyramid (count/bytes/bbox only — no phash centroid state): the
-    * retrieval queries never read the centroid, and the 65-column phash
+    * retrieval queries never read the centroid, and the 65-slot phash
     * state is most of the full aggregation's cost. Every value equals the
     * full pyramid's corresponding column. */
   def pyramidLazySlim(images: DataFrame, minRes: Int, maxRes: Int = LeafRes,

@@ -364,13 +364,7 @@ object StreamingTiles {
         if (!committed && !batch.isEmpty) {
           val dLeaf = TilePyramid.leafTiles(batch.toDF(), leafRes)
           val merged = Snapshot.snapshots(root).lastOption match {
-            case None =>
-              var all = dLeaf; var lvl = dLeaf; var r = leafRes
-              while (r > minRes) {
-                lvl = TilePyramid.rollupOnce(lvl)
-                all = all.unionByName(lvl); r -= 1
-              }
-              all
+            case None => TilePyramid.pyramidFromLeaves(dLeaf, minRes, leafRes)
             case Some((prevId, _)) =>
               Snapshot.mergeDeltaInto(Snapshot.readAsOf(spark, root, prevId),
                 dLeaf, leafRes, minRes)

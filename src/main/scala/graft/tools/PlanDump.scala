@@ -468,8 +468,8 @@ object PlanDump {
           " per-query top-k is an ObjectHashAggregate typed aggregate" +
           " that reduces to k rows per query BEFORE the exchange —" +
           " 158s -> shared 58s at sf0.1, hash-identical output",
-        graft.operators.Knn.knnSelfJoin(
-          graft.sources.Images.images(spark, dir), 3, 8)))
+        graft.operators.Knn.selfJoinPlan(
+          graft.sources.Images.images(spark, dir), 3, 8, 4096, 32)))
 
     val body = sections.map { case (title, note, df) =>
       s"## $title\n\n$note\n\n```\n${fmt(df).trim}\n```\n"

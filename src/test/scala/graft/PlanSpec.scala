@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Knn, SpatialJoin, TilePyramid}
+import graft.operators.{Knn, Snapshot, SpatialJoin, TilePyramid}
 import graft.sources.{Fixtures, Images}
 
 /** Physical-plan audits (SURVEY.md §4 / BENCH.md "plan audits"): the scale
@@ -57,10 +57,21 @@ class PlanSpec extends SparkFunSuite {
     // lazy union, O(levels^2) of them before reuse). The projected input
     // keeps a pyramid cached by an earlier suite (build(images, 4, 12))
     // from being substituted into the plan.
+    val cellExchanges = "Exchange hashpartitioning\\(cell".r
     val plan = planOf(TilePyramid.pyramidLazy(
       imgs.select("lat", "lon", "w", "h", "phash"), 4, 12))
-    assert("Exchange hashpartitioning\\(cell".r.findAllIn(plan).length == 1,
+    assert(cellExchanges.findAllIn(plan).length == 1,
       s"the pyramid must shuffle once, on the cell key:\n$plan")
+    // the phash bit state is fixed-width: hash aggregation, no sort
+    assert(!plan.contains("ObjectHashAggregate") &&
+      !plan.contains("SortAggregate"), plan)
+    // resume from stored leaves: every upper level from one combine
+    val root = java.nio.file.Files.createTempDirectory("graft-plan-resume")
+      .toString
+    Snapshot.write(TilePyramid.leafTiles(imgs, 10), root, "leaves", 1L)
+    val resume = planOf(Snapshot.rebuildFromLeaves(spark, root, 10, 6))
+    assert(cellExchanges.findAllIn(resume).length == 1,
+      s"resume must shuffle once, on the cell key:\n$resume")
   }
 
   test("kNN candidate join broadcasts the exploded query side") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.geo.{functions => G, HexTiling, QuadkeyTiling, S2Cell,
   S2Tiling, TilingStrategy}
+import graft.agg.{LevelCounts, PhashCentroid}
 import graft.operators.{Retrieval, TilePyramid}
 import graft.sources.{Fixtures, Images}
 
@@ -61,6 +62,54 @@ class S2PyramidSpec extends SparkFunSuite {
       counts
     }
     assert(built.last == Map(11 -> 1L, 12 -> 1L), "hot cluster: early stop")
+  }
+
+  test("phash bit-state and level-count aggregates == the scalar-sum " +
+      "forms they replace, nulls and empty input included") {
+    import spark.implicits._
+    // g 0: phashes with some nulls; g 1: all null; g 2: no nulls. Random
+    // longs set the sign bit too. Four partitions run partial + final.
+    val rnd = new scala.util.Random(7)
+    val leaf = (0 until 600).map { i =>
+      val g = i % 3
+      (g.toLong, if (g == 1 || (g == 0 && i % 7 == 0)) None else Some(rnd.nextLong()))
+    }.toDF("g", "phash").repartition(4)
+    def same(got: DataFrame, want: DataFrame): Unit = {
+      assert(got.schema == want.schema)
+      assert(canon(got.collect().toSeq) == canon(want.collect().toSeq))
+    }
+    def leafOf(df: DataFrame, keys: String*) = {
+      val ref = (0 until 64).map(i =>
+        sum(shiftright(col("phash"), i).bitwiseAND(lit(1L)))) :+ count(lit(1))
+      (df.groupBy(keys.map(col): _*)
+        .agg(PhashCentroid.bitsOf(col("phash")).as("bits")),
+        df.groupBy(keys.map(col): _*).agg(array(ref: _*).as("bits")))
+    }
+    val (leafGot, leafRef) = leafOf(leaf, "g")
+    same(leafGot, leafRef)
+    same(leafOf(leaf.limit(0))._1, leafOf(leaf.limit(0))._2)
+    // merge input: the leaf vectors (g 1's is 64 nulls + a count), a null
+    // vector in a group with others, and a group holding only a null one
+    val bits = leafRef.union(Seq(0L, 5L).toDF("g")
+        .withColumn("bits", lit(null).cast("array<bigint>")))
+      .withColumn("k", col("g") % 2).repartition(3)
+    same(bits.groupBy("k")
+        .agg(PhashCentroid.mergeBits(col("bits")).as("bits")),
+      bits.groupBy("k").agg(array((1 to 65).map(i =>
+        sum(element_at(col("bits"), i))): _*).as("bits")))
+    // level counts: in range, out of range and null levels
+    val res = Seq(Some(0), Some(30), Some(12), Some(12), Some(-1), Some(31),
+      Some(45), None).toDF("res").repartition(3)
+    val counts = res.agg(LevelCounts.of(col("res"))).head().getSeq[Long](0)
+    val want = res.agg(array((0 to LevelCounts.MaxRes).map(r =>
+      coalesce(sum(when(col("res") === r, 1L).otherwise(0L)), lit(0L))) :+
+      coalesce(sum(when(col("res") < 0 || col("res") > LevelCounts.MaxRes, 1L)
+        .otherwise(0L)), lit(0L)): _*)).head().getSeq[Long](0)
+    assert(counts == want && counts.last == 3L)
+    assert(LevelCounts.toMap(counts).isEmpty)
+    assert(LevelCounts.toMap(res.filter(col("res").between(0, 30))
+      .agg(LevelCounts.of(col("res"))).head().getSeq[Long](0)) ==
+      Some(Map(0 -> 1L, 12 -> 2L, 30 -> 1L)))
   }
 
   test("s2 rollup chain conserves counts and parents contain children") {

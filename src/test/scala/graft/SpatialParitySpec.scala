@@ -97,6 +97,30 @@ class SpatialParitySpec extends SparkFunSuite {
     assert(got == want && got.size > 1000)
   }
 
+  test("kNN self-join leaves the session conf as it found it") {
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val conf = spark.conf
+    val prior = conf.getAll.get(key)
+    try {
+      val few = images.limit(200)
+      conf.unset(key)
+      val out = Knn.knnSelfJoin(few, 3, 8)
+      assert(!conf.getAll.contains(key))
+      // computed before the conf was restored: the frame is a checkpoint,
+      // with no top-k aggregate left to run under the caller's conf
+      assert(out.queryExecution.logical
+        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+      assert(!out.queryExecution.executedPlan.toString
+        .contains("ObjectHashAggregate"))
+      conf.set(key, "77")
+      Knn.knnSelfJoin(few, 3, 8)
+      assert(conf.get(key) == "77")
+    } finally prior match {
+      case Some(v) => conf.set(key, v)
+      case None => conf.unset(key)
+    }
+  }
+
   test("pip prefilter+refine == brute force under the S2 strategy") {
     val fast = SpatialJoin.pipJoin(images, spark,
         strategy = graft.geo.S2Tiling, res = graft.geo.S2Tiling.defaultCoverRes)
