@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.agg.PhashCentroid
+import graft.agg.{E18, PhashCentroid}
 import graft.operators._
 import graft.sources.{Fixtures, Images}
 
@@ -1349,10 +1349,10 @@ object Queries {
     *
     * Measured alternative, rejected: deriving BOTH halves' leaf tiles in
     * one (cell, half)-keyed corpus pass (the q_stats_transfer shape) and
-    * feeding [[Snapshot.mergeDeltaLeaf]] saves two corpus scans but is
+    * feeding [[Snapshot.mergeDeltaInto]] saves two corpus scans but is
     * net SLOWER here (24.9 s vs 21.9 s at sf0.1) — caching the 2x-wider
     * combined leaf frame costs more than the scans it saves; the query is
-    * small-stage-overhead bound, not scan bound. mergeDeltaLeaf remains
+    * small-stage-overhead bound, not scan bound. mergeDeltaInto remains
     * the right entry point when the delta genuinely arrives pre-tiled. */
   private val qDeltaMerge = Q(
     "q_delta_merge", {
@@ -6128,8 +6128,8 @@ object Queries {
     * the fit chain, ranks each point's k distances by (d, cid), and
     * aggregates rn=1 (own) vs rn=2 (nearest other) — the same
     * second-smallest-under-ties semantics as the engine's value-sorted
-    * array. DECIMAL(38,0) sums, no division or sqrt in the hashed
-    * output (the q_bic_k lesson). */
+    * array. Exact integer sums as BIGINT halves ([[graft.agg.E18]]), no
+    * division or sqrt in the hashed output (the q_bic_k lesson). */
   private val qSilhouette = Q(
     "q_silhouette",
     (s, dir) => KmeansAssign.silhouette(Images.images(s, dir)),
@@ -6149,10 +6149,9 @@ object Queries {
          |       FROM (SELECT * FROM sr WHERE rn = 1) a
          |       JOIN (SELECT * FROM sr WHERE rn = 2) b USING (image_id))
          |SELECT cid, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(CAST(a2 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sa2,
-         |  CAST(sum(CAST(b2 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sb2,
-         |  CASE WHEN sum(CAST(b2 AS DECIMAL(38,0)))
-         |      > sum(CAST(a2 AS DECIMAL(38,0))) THEN 'cohesive'
+         |  ${E18.oracleSql("sum(a2)", "sa2")},
+         |  ${E18.oracleSql("sum(b2)", "sb2")},
+         |  CASE WHEN sum(b2) > sum(a2) THEN 'cohesive'
          |    ELSE 'overlapping' END AS cohesion
          |FROM ab GROUP BY cid""".stripMargin
     })
@@ -6163,8 +6162,8 @@ object Queries {
     * candidate k, scores each with the spherical BIC over an
     * integer-quantized SSE, and flags the argmin. The oracle replays the
     * ENTIRE sweep — one Lloyd CTE chain per candidate k, the same
-    * floor(min-dist·1e6) SSE (summed as DECIMAL(38,0) on both engines for
-    * exactness past Long range), the same fixed-order BIC double driving
+    * floor(min-dist·1e6) SSE (exact past Long range, emitted as BIGINT
+    * halves on both engines), the same fixed-order BIC double driving
     * the argmin — so model selection itself is hash-proven, not just each
     * fit. The raw BIC double is NOT in the hashed output (round-3 lesson:
     * it passes through `ln`, and JVM Math.log vs DuckDB ln diverge in the
@@ -6181,7 +6180,7 @@ object Queries {
     val chains = KmeansAssign.BicKs
       .map(k => kmeansChainSql(s"k${k}_", k, iters)).mkString(",\n")
     // sse_q = Σ of exact integer lattice min-distances: BIGINT terms sum
-    // in HUGEINT on DuckDB, cast to the same DECIMAL(38,0) Spark emits —
+    // in HUGEINT on DuckDB, emitted as the same BIGINT halves Spark emits —
     // zero floating-point ops anywhere in the hashed columns.
     val sses = KmeansAssign.BicKs.map { k =>
       s"""k${k}_sse AS (
@@ -6210,7 +6209,7 @@ object Queries {
     Some(
       s"""$cte,
          |${bicScoredCtesSql(KmeansAssign.DefaultIters)}
-         |SELECT k, n, sse_q,
+         |SELECT k, n, ${E18.oracleSql("sse_q", "sse_q")},
          |  CASE WHEN row_number() OVER (ORDER BY bic, k) = 1 THEN 1 ELSE 0 END AS best
          |FROM scored""".stripMargin))
 
@@ -6788,8 +6787,9 @@ object Queries {
     * vertex set this becomes the cell-bucketed 1-NN join (q_knn); the
     * literal fold IS the right shape while V fits a broadcast (the common
     * reference-route case). All arithmetic is exact: micro-degree BIGINT
-    * deltas, BIGINT squares (≤ 1.4e17), DECIMAL(38,0) sum — no
-    * floating-point op between quantize and hash on either engine. */
+    * deltas, BIGINT squares (≤ 1.4e17), an exact sum emitted as BIGINT
+    * halves ([[graft.agg.E18]]) — no floating-point op between quantize
+    * and hash on either engine. */
   private val qMapMatch = Q(
     "q_map_match",
     (s, dir) => {
@@ -6809,6 +6809,8 @@ object Queries {
         .agg(count(lit(1)).as("n_pts"),
           min(col("d2")).as("min_d2"),
           sum(col("d2").cast("decimal(38,0)")).as("sum_d2"))
+        .select(Seq(col("vid"), col("n_pts"), col("min_d2")) ++
+          E18.halves(col("sum_d2"), "sum_d2"): _*)
     },
     Some(
       s"""WITH eh1 AS (
@@ -6832,7 +6834,7 @@ object Queries {
          |)
          |SELECT CAST(vid AS INTEGER) AS vid, CAST(count(*) AS BIGINT) AS n_pts,
          |  CAST(min(d2) AS BIGINT) AS min_d2,
-         |  CAST(sum(d2) AS DECIMAL(38,0)) AS sum_d2
+         |  ${E18.oracleSql("sum(d2)", "sum_d2")}
          |FROM snapped WHERE rn = 1 GROUP BY vid""".stripMargin))
 
   /** GRID BFS (cost-distance / service-area) — hop distance of every

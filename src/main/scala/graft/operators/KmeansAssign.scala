@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.agg.E18
+
 /** Seeded fixed-iteration Lloyd k-means over the geo-anchors — the
   * LEARNED-assignment tiling of the reference (the third strategy of
   * SURVEY.md §2.10's pluggable-index story, next to quadkey and S2):
@@ -152,8 +154,8 @@ object KmeansAssign {
     * a point can contribute up to (2·3.6e8)² ≈ 5.2e17, so a Long total
     * would overflow near 17 rows of worst-case spread — decimal keeps the
     * sum exact to ~2e20 worst-case rows, past the 10^12-row design point.
-    * DuckDB mirrors this for free (BIGINT sums accumulate in HUGEINT; the
-    * oracle casts to the same DECIMAL(38,0)). */
+    * DuckDB mirrors this for free (BIGINT sums accumulate in HUGEINT).
+    * The output carries it as two BIGINT halves ([[graft.agg.E18]]). */
   val BicScale: Double = 1.0e12
 
   /** A6 — BIC model selection (≙ cluster_utils.py:50-61
@@ -288,9 +290,8 @@ object KmeansAssign {
     import org.apache.spark.sql.types._
     val (n, scored) = sweptFor(images, memoKey, ks, iters)
     val bestK = scored.minBy(s => (s.bic, s.k)).k
-    // sse_q is DECIMAL(38,0): exact at any scale (see BicScale) — built
-    // with an explicit schema so the parquet scale is 0, matching the
-    // oracle's CAST(... AS DECIMAL(38,0)) rendering digit-for-digit.
+    // sse_q is exact at any scale (see BicScale) and emitted as its two
+    // BIGINT halves (graft.agg.E18): a DECIMAL renders engine-dependently.
     // The raw BIC double stays INTERNAL (it drives `best` only): it is the
     // one sweep quantity that passes through a transcendental (`ln`), and
     // JVM Math.log vs DuckDB ln can differ in the last ulp — a landmine for
@@ -300,11 +301,12 @@ object KmeansAssign {
     val schema = StructType(Seq(
       StructField("k", IntegerType, nullable = false),
       StructField("n", LongType, nullable = false),
-      StructField("sse_q", DecimalType(38, 0), nullable = false),
+      StructField("sse_q_hi", LongType, nullable = false),
+      StructField("sse_q_lo", LongType, nullable = false),
       StructField("best", IntegerType, nullable = false)))
     val rows = scored.map { s =>
-      Row(s.k, n, new java.math.BigDecimal(s.sseQ.bigInteger),
-        if (s.k == bestK) 1 else 0)
+      val (hi, lo) = E18.split(s.sseQ)
+      Row(s.k, n, hi, lo, if (s.k == bestK) 1 else 0)
     }
     images.sparkSession.createDataFrame(rows.asJava, schema)
   }
@@ -407,8 +409,9 @@ object KmeansAssign {
     * (nearest) centroid and b² = the smallest squared distance to any
     * OTHER centroid (= the second-smallest entry of the sorted distance
     * array — exact under ties, where "own" is the first argmin). Emits
-    * per cluster the exact integer sums Σa², Σb² (DECIMAL(38,0) — same
-    * overflow reasoning as [[BicScale]]) plus the member count and a
+    * per cluster the exact integer sums Σa², Σb² (summed in DECIMAL(38,0)
+    * — same overflow reasoning as [[BicScale]] — and emitted as the BIGINT
+    * halves of [[graft.agg.E18]]) plus the member count and a
     * cohesion label (Σb² > Σa² ⇔ mean simplified silhouette > 0 on the
     * squared scale). No division, no sqrt, no transcendental anywhere in
     * the hashed output — a consumer wanting the classical [-1,1] score
@@ -429,8 +432,9 @@ object KmeansAssign {
       .agg(count(lit(1)).as("n"),
         sum(col("a2").cast("decimal(38,0)")).as("sa2"),
         sum(col("b2").cast("decimal(38,0)")).as("sb2"))
-      .withColumn("cohesion",
+      .select(Seq(col("cid"), col("n")) ++ E18.halves(col("sa2"), "sa2") ++
+        E18.halves(col("sb2"), "sb2") :+
         when(col("sb2") > col("sa2"), lit("cohesive"))
-          .otherwise(lit("overlapping")))
+          .otherwise(lit("overlapping")).as("cohesion"): _*)
   }
 }

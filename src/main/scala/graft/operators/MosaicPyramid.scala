@@ -14,24 +14,24 @@ import graft.multimodal.{functions => M}
   * where the summary here is the mosaic of the members' pixels instead of
   * a text summary).
   *
-  * Each image decodes ONCE (at the leaf level) to a fixed 4x4 RGB thumb;
-  * a tile's mosaic is the per-position pixel-wise MEAN of its members'
-  * thumbs, carried through the pyramid as the exact associative partial
-  * state `(s_0..s_47, n_imgs)` — 48 per-position byte sums + the member
-  * count (mean_i = s_i / n). Parent state is the plain columnwise sum of
-  * child states, so every level is ONE `groupBy(parent).agg(49 sums)` —
-  * the same whole-stage-codegen n-sum shape as
-  * [[graft.agg.PhashCentroid]]'s 65-sum bit-majority rollup, and the same
-  * literal-free parent key as [[TilePyramid.rollupOnce]] (one Janino
-  * compile for all levels).
+  * Each image decodes ONCE to a fixed 4x4 RGB thumb; a tile's mosaic is
+  * the per-position pixel-wise MEAN of its members' thumbs, carried as
+  * the exact associative partial state `(s_0..s_47, n_imgs)` — 48
+  * per-position byte sums + the member count (mean_i = s_i / n). The
+  * state of a tile is the columnwise sum over every image under it, so
+  * any level is ONE `groupBy(cell).agg(49 sums)` keyed on each image's
+  * ancestor at that level — the same whole-stage-codegen n-sum shape as
+  * [[graft.agg.PhashCentroid]]'s bit-count state, and the same "explode
+  * to ancestors, combine once" rule as [[TilePyramid]]: no level is
+  * derived from another.
   *
   * Scale notes (100 TB design): the decode+resize runs exactly once per
-  * image inside the leaf projection (map-side, no shuffle); each level is
+  * image inside the scan projection (map-side, no shuffle); a level is
   * one keyed shuffle whose payload is 49 longs per tile regardless of
-  * image sizes; levels shrink 4x, so the leaf rollup dominates and
-  * map-side partial aggregation absorbs hot cells (spatially adjacent
-  * children co-locate in input splits). Nothing larger than the 48-long
-  * state ever rides a shuffle — the raster bytes stay in the scan stage.
+  * image sizes, and map-side partial aggregation absorbs hot cells
+  * (spatially adjacent images co-locate in input splits). Nothing larger
+  * than the 48-long state ever rides a shuffle — the raster bytes stay in
+  * the scan stage.
   */
 object MosaicPyramid {
 
@@ -41,18 +41,15 @@ object MosaicPyramid {
   /** Per-mosaic state width: ThumbPx^2 positions x 3 channels. */
   val NBytes: Int = ThumbPx * ThumbPx * 3
 
-  private def sumCols(prefix: String): Seq[String] =
-    (0 until NBytes).map(i => s"$prefix$i")
-
-  /** Leaf mosaics at `res`: decode -> 4x4 thumb -> 48 per-position sums +
-    * count, one shuffle. `images` must carry (bytes, fmt, w, h, lat, lon). */
-  def leafMosaics(images: DataFrame, res: Int,
-                  strategy: TilingStrategy = QuadkeyTiling): DataFrame = {
+  /** Mosaic state per `cell` (a column over the image row): decode -> 4x4
+    * thumb -> 48 per-position sums + count, one shuffle. `images` must
+    * carry (bytes, fmt, w, h, lat, lon). */
+  private def mosaicsBy(images: DataFrame, cell: Column): DataFrame = {
     val thumb = M.raster_resize(
       M.raster_decode(col("bytes"), col("fmt")),
       col("w"), col("h"), lit(ThumbPx), lit(ThumbPx))
     val withThumb = images
-      .withColumn("cell", strategy.encodeCol(col("lat"), col("lon"), res))
+      .withColumn("cell", cell)
       .withColumn("thumb", thumb)
     val aggs: Seq[Column] = count(lit(1)).as("n_imgs") +:
       (0 until NBytes).map(i =>
@@ -60,28 +57,20 @@ object MosaicPyramid {
     withThumb.groupBy(col("cell")).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** One rollup step: parent mosaic state = columnwise sum of children.
-    * Literal-free (parent derived from each row's own cell), so every
-    * level reuses one generated aggregate. */
-  def rollupOnce(tiles: DataFrame,
-                 strategy: TilingStrategy = QuadkeyTiling): DataFrame = {
-    val aggs: Seq[Column] = sum(col("n_imgs")).as("n_imgs") +:
-      sumCols("s").map(c => sum(col(c)).as(c))
-    tiles
-      .withColumn("parent", strategy.parentOnceCol(col("cell")))
-      .groupBy(col("parent"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumnRenamed("parent", "cell")
-  }
+  /** Leaf mosaics at `res`. */
+  def leafMosaics(images: DataFrame, res: Int,
+                  strategy: TilingStrategy = QuadkeyTiling): DataFrame =
+    mosaicsBy(images, strategy.encodeCol(col("lat"), col("lon"), res))
 
-  /** Mosaic level at `outRes`, built bottom-up from leaf level `leafRes`
-    * (decode once, then `leafRes - outRes` associative rollups). */
+  /** Mosaic level at `outRes` of the pyramid whose leaves are at `leafRes`:
+    * one aggregation keyed on each image's `outRes` ancestor of its leaf
+    * cell (the strategy's hierarchy, which for the hex grid is not the
+    * direct `outRes` encoding). */
   def levelAt(images: DataFrame, leafRes: Int, outRes: Int,
               strategy: TilingStrategy = QuadkeyTiling): DataFrame = {
     require(outRes <= leafRes, s"levelAt: outRes $outRes above leaf $leafRes")
-    (outRes until leafRes).foldLeft(leafMosaics(images, leafRes, strategy)) {
-      (acc, _) => rollupOnce(acc, strategy)
-    }
+    mosaicsBy(images, strategy.parentAtCol(
+      strategy.encodeCol(col("lat"), col("lon"), leafRes), outRes))
   }
 
   /** Hash-stable integer summary of a mosaic state frame: per-channel

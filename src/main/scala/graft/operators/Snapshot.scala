@@ -601,120 +601,93 @@ object Snapshot {
   /** Resume: read ONLY the leaf level of a snapshot and rebuild all upper
     * levels `minRes..leafRes-1` from it
     * (≙ transform_tree.py:58-119: keep layer 0, reconstruct the rest).
-    * Every upper level comes from one combine over the leaf tiles
-    * re-keyed to their ancestors ([[TilePyramid.pyramidFromLeaves]]): one
-    * cell shuffle, not one per level. Returns the rebuilt pyramid
-    * INCLUDING the leaves. */
+    * The leaves pass through unchanged; every upper level comes from ONE
+    * [[TilePyramid.combineByCell]] over the leaf tiles re-keyed to their
+    * ancestors ([[TilePyramid.toAncestors]]): one cell shuffle, not one
+    * per level. Returns the rebuilt quadkey pyramid INCLUDING the
+    * leaves. */
   def rebuildFromLeaves(spark: SparkSession, root: String, leafRes: Int,
-                        minRes: Int): DataFrame =
-    TilePyramid.pyramidFromLeaves(
-      level(spark, root, leafRes).drop(LineageCols: _*), minRes, leafRes)
+                        minRes: Int): DataFrame = {
+    val leaves = level(spark, root, leafRes).drop(LineageCols: _*)
+    if (minRes >= leafRes) leaves
+    else leaves.unionByName(TilePyramid.combineByCell(TilePyramid.toAncestors(
+      leaves, minRes until leafRes, graft.geo.QuadkeyTiling)))
+  }
 
   /** INCREMENTAL pyramid maintenance — fold a DELTA corpus into an
     * existing snapshot WITHOUT a full rebuild (the batch counterpart of
     * the streaming maintenance, and the nightly-delta story at 100 TB:
     * re-aggregating the whole corpus for a 0.1% addition is the failure
-    * mode). Additions only; every tile summary is a monotone combiner
+    * mode). Additions only; every tile summary is an associative combiner
     * (sums, bbox min/max, phash bit counts), so:
     *
     *  1. delta leaf tiles — ONE scan of the delta corpus;
-    *  2. touched leaf cells = the delta's cells; combined leaf level =
-    *     untouched old rows (anti-join) ∪ combine(old ∩ touched ⊎ delta)
-    *     ([[TilePyramid.combineByCell]]);
-    *  3. per level upward: touched parents = parent(touched); recompute
-    *     ONLY them, from the new child level (the parent-key semi-join
-    *     pulls in untouched SIBLINGS, so each recomputed parent sees all
-    *     its children); untouched parents pass through from the snapshot.
+    *  2. delta rows = those tiles re-keyed to their ancestor at every
+    *     level `minRes..leafRes` ([[TilePyramid.toAncestors]]); touched
+    *     cells = the distinct cells of the delta rows;
+    *  3. merged = untouched old tiles (anti-join) ∪ ONE
+    *     [[TilePyramid.combineByCell]] over the touched old tiles
+    *     (semi-join) and the delta rows.
     *
-    * Work scales with |delta| + |touched branches| (bounded by |delta| x
-    * levels), never with corpus size; the touched-cell frames shrink 4x
-    * per level. Equality with a from-scratch rebuild of the full corpus
-    * is oracle-proven (q_delta_merge) and spec-pinned across every level
-    * (SnapshotSpec). Returns the merged pyramid `minRes..leafRes`,
-    * EAGERLY MATERIALIZED (`localCheckpoint(eager = true)`): every
-    * intermediate cache — the delta leaf frame, the per-level touched-cell
-    * sets, each merged level — is unpersisted before returning, so a
+    * Step 3 is exact because the old tile of a touched cell already
+    * summarizes every old image under it: combining it with the delta's
+    * contribution to that cell gives the from-scratch tile. The old
+    * pyramid must therefore hold every level `minRes..leafRes` for the
+    * cells it covers (a [[TilePyramid.build]] early stop that dropped
+    * coarse levels breaks this). Work scales with |delta| x levels plus
+    * the touched old tiles, never with corpus size, and the whole merge
+    * is one combine whatever the number of levels. Equality with a
+    * from-scratch rebuild of the full corpus is oracle-proven
+    * (q_delta_merge) and spec-pinned across every level (SnapshotSpec).
+    * Returns the merged pyramid `minRes..leafRes`, EAGERLY MATERIALIZED
+    * (`localCheckpoint(eager = true)`) and persisting nothing else, so a
     * long-lived session running nightly deltas holds exactly ONE
     * result-sized cache per merge, released when the returned frame is
-    * GC'd (round-3 verdict: the un-released intermediates accumulated a
-    * pyramid's worth of cache per merge). The lineage truncation is the
-    * usual localCheckpoint trade: losing an executor during the merged
-    * frame's lifetime forfeits recompute — callers that need durability
-    * write the result to a snapshot (which q_delta_merge's consumers do)
-    * rather than keeping the ephemeral frame. */
+    * GC'd. The lineage truncation is the usual localCheckpoint trade:
+    * losing an executor during the merged frame's lifetime forfeits
+    * recompute — callers that need durability write the result to a
+    * snapshot (which q_delta_merge's consumers do) rather than keeping
+    * the ephemeral frame. */
   def mergeDelta(spark: SparkSession, root: String, delta: DataFrame,
                  leafRes: Int, minRes: Int,
                  strategy: graft.geo.TilingStrategy = graft.geo.QuadkeyTiling)
       : DataFrame =
-    mergeDeltaLeaf(spark, root,
+    mergeDeltaInto(read(spark, root),
       TilePyramid.leafTiles(delta, leafRes, strategy),
       leafRes, minRes, strategy)
 
-  /** [[mergeDelta]] taking the delta as ALREADY-AGGREGATED leaf tiles
-    * (schema of [[TilePyramid.leafTiles]] at `leafRes`) instead of a raw
-    * corpus. This is the entry point when the caller derived the delta's
-    * tiles in a scan it was making anyway (q_delta_merge derives base +
-    * delta halves from ONE corpus pass via extraKeys grouping) or when the
-    * delta arrives pre-tiled (a streaming micro-batch's per-cell
-    * increments). */
-  def mergeDeltaLeaf(spark: SparkSession, root: String, deltaLeaf: DataFrame,
-                     leafRes: Int, minRes: Int,
-                     strategy: graft.geo.TilingStrategy = graft.geo.QuadkeyTiling)
-      : DataFrame =
-    mergeDeltaInto(read(spark, root), deltaLeaf, leafRes, minRes, strategy)
-
-  /** The merge core over an explicit OLD pyramid frame — callers that
-    * read the old state some other way (a versioned snapshot via
-    * [[readAsOf]], the streaming maintenance sink's previous version)
-    * pass it directly; the root-based entry points delegate here. */
+  /** The merge core over an explicit OLD pyramid frame and the delta as
+    * ALREADY-AGGREGATED leaf tiles (schema of [[TilePyramid.leafTiles]]
+    * at `leafRes`) — for callers that read the old state some other way
+    * (a versioned snapshot via [[readAsOf]], the streaming maintenance
+    * sink's previous version) or whose delta arrives pre-tiled (a
+    * streaming micro-batch's per-cell increments); [[mergeDelta]]
+    * delegates here. An empty old pyramid yields the delta's own
+    * pyramid. */
   def mergeDeltaInto(oldPyramid: DataFrame, deltaLeaf: DataFrame,
                      leafRes: Int, minRes: Int,
                      strategy: graft.geo.TilingStrategy = graft.geo.QuadkeyTiling)
+      : DataFrame =
+    mergePlan(oldPyramid, deltaLeaf, leafRes, minRes, strategy)
+      .localCheckpoint(true)
+
+  /** The lazy plan [[mergeDeltaInto]] materializes. The delta leaf
+    * aggregation feeds both the touched cells and the combine; the two
+    * references share one exchange (ReuseExchange), so the delta is
+    * scanned once without a persist. */
+  private[graft] def mergePlan(oldPyramid: DataFrame, deltaLeaf: DataFrame,
+                               leafRes: Int, minRes: Int,
+                               strategy: graft.geo.TilingStrategy)
       : DataFrame = {
-    val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cached(df: DataFrame): DataFrame = {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      caches += p
-      p
-    }
     val old = oldPyramid.drop(LineageCols: _*)
-    val cols = old.columns.map(col).toIndexedSeq
-    // the delta leaf aggregation is the only corpus-scan in the merge and
-    // is referenced three times (distinct cells, the semi-join filter, the
-    // combine union) — persist it or the delta scans once per reference
-    val dLeaf = cached(deltaLeaf)
-    val touchedLeaf = cached(dLeaf.select(col("cell")).distinct())
-    val oldLeaf = old.filter(col("res") === leafRes)
-    val combined = TilePyramid.combineByCell(
-      oldLeaf.join(touchedLeaf, Seq("cell"), "left_semi")
-        .unionByName(dLeaf), strategy)
-    // each merged level is PERSISTED: level r-1 is derived from level r
-    // AND unioned into the result, so without a cache the union's branch
-    // for level r' re-executes every finer level's semi/anti/combine —
-    // O(levels^2) work (measured ~20 s -> ~6 s at sf0.1)
-    var newLevel = cached(oldLeaf.join(touchedLeaf, Seq("cell"), "left_anti")
-      .unionByName(combined.select(cols: _*)))
-    var all = newLevel
-    var touched = touchedLeaf
-    var r = leafRes
-    while (r > minRes) {
-      val touchedParents = cached(touched
-        .select(strategy.parentOnceCol(col("cell")).as("cell")).distinct())
-      val children = newLevel
-        .withColumn("p", strategy.parentOnceCol(col("cell")))
-        .join(touchedParents.select(col("cell").as("p")), Seq("p"), "left_semi")
-        .drop("p")
-      val recomputed = TilePyramid.rollupOnce(children, strategy)
-      newLevel = cached(old.filter(col("res") === r - 1)
-        .join(touchedParents, Seq("cell"), "left_anti")
-        .unionByName(recomputed.select(cols: _*)))
-      all = all.unionByName(newLevel)
-      touched = touchedParents
-      r -= 1
-    }
-    val result = all.localCheckpoint(true)
-    caches.foreach(_.unpersist(blocking = false))
-    result
+      .filter(col("res").between(minRes, leafRes))
+    val deltaRows = TilePyramid.toAncestors(deltaLeaf, minRes to leafRes,
+      strategy)
+    val touched = deltaRows.select(col("cell")).distinct()
+    old.join(touched, Seq("cell"), "left_anti")
+      .unionByName(TilePyramid.combineByCell(
+        old.join(touched, Seq("cell"), "left_semi").unionByName(deltaRows),
+        strategy))
   }
 
   /** Stats transfer between snapshots (≙ `update_kmean_with_index`,

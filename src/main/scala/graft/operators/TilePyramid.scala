@@ -73,52 +73,47 @@ object TilePyramid {
       .withColumn("res", lit(res))
   }
 
+  /** Each row re-keyed to its ancestor at every level in `levels` (one
+    * output row per level): the one step every pyramid producer shares.
+    * Followed by ONE `groupBy(cell)` of associative summaries, it yields
+    * all levels at once, since the strategy's `parentAt` equals repeated
+    * `parentOnce` for every index. A level-by-level rollup chain instead
+    * costs a shuffle per level and, as a lazy union, re-plans the chain
+    * prefix in every branch (O(levels²) operators). */
+  private[operators] def toAncestors(rows: DataFrame, levels: Seq[Int],
+                                     strategy: TilingStrategy): DataFrame =
+    rows.withColumn("cell", explode(array(
+      levels.map(r => strategy.parentAtCol(col("cell"), r)): _*)))
+
   /** Every level in `levels` as ONE keyed aggregation over the images: each
-    * image is encoded once at `leafRes`, exploded to its ancestor cell at
-    * every requested level, and `groupBy(cell)` aggregates the raw image
-    * rows of each tile directly. Every tile summary is associative (long
-    * counts and sums, double min/max, phash bit counts), and the strategy's
-    * `parentAt` equals repeated `parentOnce` for every index, so each row
-    * equals the one a level-by-level [[rollupOnce]] chain produces.
+    * image is encoded once at `leafRes`, re-keyed [[toAncestors]], and
+    * `groupBy(cell)` aggregates the raw image rows of each tile directly
+    * (long counts and sums, double min/max, phash bit counts).
     *
     * Scale shape: one shuffle for the whole pyramid, keyed on the cell;
     * the exploded rows (|levels| per image) are absorbed map-side by
     * partial aggregation, since an image's ancestors repeat across the
-    * images of one input split. A chain of per-level rollups instead costs
-    * a shuffle per level and, as a lazy union, re-plans the chain prefix
-    * in every branch (O(levels²) operators). `res` is derived from the
-    * cell, so a filter on it stays an integer test on the group key. */
+    * images of one input split. `res` is derived from the cell, so a
+    * filter on it stays an integer test on the group key. */
   private def aggregateLevels(images: DataFrame, levels: Range, leafRes: Int,
                               strategy: TilingStrategy,
                               full: Boolean): DataFrame = {
     require(levels.nonEmpty && levels.last <= leafRes,
       s"levels $levels must be non-empty and not finer than leaf $leafRes")
     val aggs = imageAggs(full)
-    val tiles = withCell(images, leafRes, strategy)
-      .withColumn("cell", explode(array(
-        levels.map(r => strategy.parentAtCol(col("cell"), r)): _*)))
+    val tiles = toAncestors(withCell(images, leafRes, strategy), levels,
+        strategy)
       .groupBy(col("cell"))
       .agg(aggs.head, aggs.tail: _*)
     (if (full) withCentroid(tiles) else tiles)
       .withColumn("res", strategy.resCol(col("cell")))
   }
 
-  /** Literal-free rollup one level up: the target resolution is derived
-    * from each row's own cell (res lives in the top bits — GridCell
-    * layout), so every application generates the identical plan. Used by
-    * the incremental maintenance paths, which re-aggregate stored tiles
-    * rather than images. */
-  def rollupOnce(tiles: DataFrame): DataFrame = rollupOnce(tiles, QuadkeyTiling)
-
-  def rollupOnce(tiles: DataFrame, strategy: TilingStrategy): DataFrame =
-    combineByCell(
-      tiles.withColumn("cell", strategy.parentOnceCol(col("cell"))), strategy)
-
-  /** Combine tile rows sharing the SAME cell — the delta-merge combiner:
-    * identical aggregate algebra to [[rollupOnce]] (every tile summary is
-    * a monotone combiner: sums, min/max bbox, phash bit counts) but keyed
-    * by the cell itself, so an old tile row and a delta tile row for one
-    * cell fold into the tile a from-scratch build would produce. */
+  /** Combine tile rows sharing the SAME cell into one tile: every tile
+    * summary is an associative combiner (sums, min/max bbox, phash bit
+    * counts), so tiles of one cell from disjoint image sets — an old tile
+    * and a delta tile, or the leaf tiles re-keyed to a common ancestor —
+    * fold into the tile a from-scratch build would produce. */
   def combineByCell(tiles: DataFrame,
                     strategy: TilingStrategy = QuadkeyTiling): DataFrame = {
     val aggs = Seq(
@@ -130,20 +125,6 @@ object TilePyramid {
     withCentroid(tiles.groupBy(col("cell")).agg(aggs.head, aggs.tail: _*))
       .withColumn("res", strategy.resCol(col("cell")))
   }
-
-  /** The quadkey pyramid `minRes..leafRes` over stored quadkey leaf tiles
-    * at `leafRes`: the leaves, unchanged, plus every upper level from ONE
-    * [[combineByCell]] over the leaf rows re-keyed to their ancestor at
-    * each level (the [[aggregateLevels]] shape over tiles instead of
-    * images: one cell shuffle, where a [[rollupOnce]] chain costs one per
-    * level). Equal to that chain, since every tile summary is
-    * associative. Used by the resume and streaming paths. */
-  def pyramidFromLeaves(leaves: DataFrame, minRes: Int,
-                        leafRes: Int): DataFrame =
-    if (minRes >= leafRes) leaves
-    else leaves.unionByName(combineByCell(
-      leaves.withColumn("cell", explode(array((minRes until leafRes).map(r =>
-        QuadkeyTiling.parentAtCol(col("cell"), r)): _*)))))
 
   /** Build the full pyramid `minRes..maxRes` as one persisted DataFrame
     * (one aggregation, see [[aggregateLevels]]) and count its levels from

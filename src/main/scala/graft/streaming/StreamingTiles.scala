@@ -328,8 +328,8 @@ object StreamingTiles {
     *      [[graft.operators.TilePyramid.leafTiles]] plan);
     *   2. merges them into the LATEST committed version with
     *      [[graft.operators.Snapshot.mergeDeltaInto]] — compute is
-    *      O(|delta| x levels), never corpus size (the first batch builds
-    *      the initial pyramid instead);
+    *      O(|delta| x levels), never corpus size, and one combine for
+    *      all levels (the first batch merges into an empty pyramid);
     *   3. commits the result as a new snapshot version whose id encodes
     *      the micro-batch id.
     *
@@ -363,12 +363,9 @@ object StreamingTiles {
           java.nio.file.Paths.get(s"$root/MANIFEST-$id.json"))
         if (!committed && !batch.isEmpty) {
           val dLeaf = TilePyramid.leafTiles(batch.toDF(), leafRes)
-          val merged = Snapshot.snapshots(root).lastOption match {
-            case None => TilePyramid.pyramidFromLeaves(dLeaf, minRes, leafRes)
-            case Some((prevId, _)) =>
-              Snapshot.mergeDeltaInto(Snapshot.readAsOf(spark, root, prevId),
-                dLeaf, leafRes, minRes)
-          }
+          val prev = Snapshot.snapshots(root).lastOption
+            .fold(dLeaf.limit(0))(p => Snapshot.readAsOf(spark, root, p._1))
+          val merged = Snapshot.mergeDeltaInto(prev, dLeaf, leafRes, minRes)
           Snapshot.writeVersioned(merged, root, id, buildTs = batchId)
           ()
         }

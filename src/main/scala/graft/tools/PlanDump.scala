@@ -205,12 +205,11 @@ object PlanDump {
           " the shared dense cache releases before return",
         graft.Queries.queryMap("q_hotspot_regions")(spark, dir)),
       ("Mosaic pyramid (round 4)",
-        "decode + 4x4 thumb ONCE in the leaf projection (map-side); the" +
-          " mosaic rides the pyramid as 48 per-position byte sums + count" +
-          " — one 49-sum whole-stage-codegen aggregate per level (the" +
-          " PhashCentroid n-sum shape), literal-free parent key so Janino" +
-          " compiles the aggregate once; raster bytes never leave the" +
-          " scan stage",
+        "decode + 4x4 thumb ONCE in the scan projection (map-side); the" +
+          " mosaic is 48 per-position byte sums + count — ONE 49-sum" +
+          " whole-stage-codegen aggregate keyed on each image's res-4" +
+          " ancestor of its leaf cell, no per-level rollup chain; raster" +
+          " bytes never leave the scan stage",
         graft.operators.MosaicPyramid.summarize(
           graft.operators.MosaicPyramid.levelAt(
             Images.imagesWithBytes(spark, dir), leafRes = 7, outRes = 4))),

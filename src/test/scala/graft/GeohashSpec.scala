@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.agg.E18
 import graft.geo.Geohash
 import graft.sources.{Fixtures, Images}
 
@@ -82,7 +83,8 @@ class GeohashSpec extends SparkFunSuite {
     val verts = Fixtures.routeVertices
     val got = SparkEntry.queries("q_map_match")(spark, SparkSpec.Sf)
       .collect().map(r => (r.getInt(0),
-        (r.getLong(1), r.getLong(2), r.getDecimal(3).toBigInteger)))
+        (r.getLong(1), r.getLong(2),
+          (BigInt(r.getLong(3)) * E18.Base + r.getLong(4)).bigInteger)))
       .toMap
     val ev = graft.sources.Events
       .withPosition(spark.read.parquet(s"${SparkSpec.Sf}/events.parquet"))

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
+import graft.agg.E18
 import graft.operators.KmeansAssign
 import graft.sources.Images
 
@@ -26,6 +28,10 @@ class KmeansSpec extends SparkFunSuite {
     * arithmetic: quantize once to micro-degrees, floorDiv centroid means,
     * pure-Long squared distances. */
   private def q(x: Double): Long = math.floor(x * 1000000).toLong
+
+  /** The exact sum behind the (hi, lo) BIGINT halves at columns i, i + 1. */
+  private def e18(r: Row, i: Int): BigInt =
+    BigInt(r.getLong(i)) * E18.Base + r.getLong(i + 1)
 
   private def lloyd(pts: Array[(String, Double, Double)], k: Int = K,
                     iters: Int = Iters)
@@ -71,8 +77,7 @@ class KmeansSpec extends SparkFunSuite {
     val imgs = Images.images(spark, SparkSpec.Sf)
     val ks = Seq(1, 2, 3)
     val rows = KmeansAssign.bicSweep(imgs, ks, Iters).collect()
-      .map(r => (r.getInt(0), r.getLong(1),
-        BigInt(r.getDecimal(2).toBigInteger), r.getInt(3)))
+      .map(r => (r.getInt(0), r.getLong(1), e18(r, 2), r.getInt(4)))
       .sortBy(_._1)
     assert(rows.map(_._1).toSeq == ks)
     val n = anchors.length.toLong
@@ -108,7 +113,7 @@ class KmeansSpec extends SparkFunSuite {
     val imgs = Images.images(spark, SparkSpec.Sf)
     val ks = Seq(1, 2, 3)
     val sweep = KmeansAssign.bicSweep(imgs, ks, Iters).collect()
-      .map(r => (r.getInt(0), r.getInt(3)))
+      .map(r => (r.getInt(0), r.getInt(4)))
     val bestK = sweep.find(_._2 == 1).get._1
     val auto = KmeansAssign.assignAuto(imgs, ks, Iters)
     val got = auto.collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2)))
@@ -157,11 +162,11 @@ class KmeansSpec extends SparkFunSuite {
     rows.foreach { r =>
       val (n, sa2, sb2) = expected(r.getInt(0))
       assert(r.getLong(1) == n)
-      assert(BigInt(r.getDecimal(2).toBigInteger) == sa2)
-      assert(BigInt(r.getDecimal(3).toBigInteger) == sb2)
+      assert(e18(r, 2) == sa2)
+      assert(e18(r, 4) == sb2)
       assert(sa2 <= sb2) // a2 <= b2 pointwise, so the sums order too
       val label = if (sb2 > sa2) "cohesive" else "overlapping"
-      assert(r.getString(4) == label)
+      assert(r.getString(6) == label)
     }
   }
 }

@@ -72,6 +72,23 @@ class PlanSpec extends SparkFunSuite {
     val resume = planOf(Snapshot.rebuildFromLeaves(spark, root, 10, 6))
     assert(cellExchanges.findAllIn(resume).length == 1,
       s"resume must shuffle once, on the cell key:\n$resume")
+    // delta merge: one explode to ancestors + one combine, so the plan
+    // shape does not depend on the number of levels
+    val slim = imgs.select("lat", "lon", "w", "h", "phash")
+    val base = java.nio.file.Files.createTempDirectory("graft-plan-merge")
+      .toString
+    Snapshot.write(TilePyramid.pyramidLazy(slim, 2, 8), base, "base", 1L)
+    def mergeExchanges(minRes: Int): Int = cellExchanges.findAllIn(planOf(
+      Snapshot.mergePlan(Snapshot.read(spark, base),
+        TilePyramid.leafTiles(slim, 8), 8, minRes,
+        graft.geo.QuadkeyTiling))).length
+    val (five, two) = (mergeExchanges(5), mergeExchanges(2))
+    assert(five > 0 && five == two,
+      s"merge cell exchanges: $five for levels 5..8, $two for 2..8")
+    val mosaic = planOf(graft.operators.MosaicPyramid.levelAt(
+      Images.imagesWithBytes(spark, SparkSpec.Sf), 9, 5))
+    assert(cellExchanges.findAllIn(mosaic).length == 1,
+      s"the mosaic level must shuffle once, on the cell key:\n$mosaic")
   }
 
   test("kNN candidate join broadcasts the exploded query side") {
@@ -128,12 +145,11 @@ class PlanSpec extends SparkFunSuite {
     // of empty-partition Window nodes. (Windows inside localCheckpointed
     // segments are per-query-partitioned by construction in Knn/Retrieval.)
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    Queries.all.foreach { q =>
-      val df = q.fn(spark, SparkSpec.Sf)
+    SparkSpec.shippedQueries.foreach { case (name, df) =>
       val bad = df.queryExecution.optimizedPlan.collect {
         case w: LWindow if w.partitionSpec.isEmpty => w
       }
-      assert(bad.isEmpty, s"${q.name} plans a partitionless window")
+      assert(bad.isEmpty, s"$name plans a partitionless window")
     }
   }
 

@@ -14,15 +14,22 @@ import graft.sources.{Fixtures, Images}
   * must conserve totals and respect containment. */
 class S2PyramidSpec extends SparkFunSuite {
 
+  /** One level up, the reference way: re-key every tile to its parent
+    * and combine the tiles that now share a cell. */
+  private def rollupOnce(tiles: DataFrame,
+                         strategy: TilingStrategy): DataFrame =
+    TilePyramid.combineByCell(
+      tiles.withColumn("cell", strategy.parentOnceCol(col("cell"))), strategy)
+
   /** Reference pyramid, collected as `cols` rows: leaf tiles, then one
-    * [[TilePyramid.rollupOnce]] per level, with the early stop dropping
-    * every level coarser than the finest non-leaf level of <= 1 cell. */
+    * [[rollupOnce]] per level, with the early stop dropping every level
+    * coarser than the finest non-leaf level of <= 1 cell. */
   private def chainPyramid(imgs: DataFrame, lo: Int, hi: Int,
                            strategy: TilingStrategy, cols: Seq[String])
       : (Seq[Row], Map[Int, Long]) = {
     val levels = (hi until lo by -1).scanLeft(
       TilePyramid.leafTiles(imgs, hi, strategy))(
-      (level, _) => TilePyramid.rollupOnce(level, strategy))
+      (level, _) => rollupOnce(level, strategy))
     val all = levels.reduce(_.unionByName(_))
       .select(cols.map(col): _*).collect().toSeq
     val counts = all.groupBy(_.getAs[Int]("res"))

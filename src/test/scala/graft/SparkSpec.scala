@@ -24,6 +24,12 @@ object SparkSpec {
     s
   }
   val Sf = "/root/testdata/sf0.001"
+
+  /** Every shipped query's frame at [[Sf]], built once per test JVM: the
+    * registry-wide audits read only plans and schemas, and building a
+    * frame already runs the query's eager derivations. */
+  lazy val shippedQueries: Seq[(String, org.apache.spark.sql.DataFrame)] =
+    Queries.all.map(q => q.name -> q.fn(spark, Sf))
 }
 
 abstract class SparkFunSuite extends AnyFunSuite {

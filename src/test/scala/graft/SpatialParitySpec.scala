@@ -163,7 +163,8 @@ class SpatialParitySpec extends SparkFunSuite {
 
   test("pyramid under the HEX strategy: totals invariant, parent partition") {
     val leaves = TilePyramid.leafTiles(images, 8, graft.geo.HexTiling)
-    val rolled = TilePyramid.rollupOnce(leaves, graft.geo.HexTiling)
+    val rolled = TilePyramid.pyramidLazy(images, 7, 8, graft.geo.HexTiling)
+      .filter(col("res") === 7)
     val leafTot = leaves.agg(sum(col("cnt"))).collect()(0).getLong(0)
     val rollTot = rolled.agg(sum(col("cnt"))).collect()(0).getLong(0)
     assert(leafTot == rollTot) // every leaf lands in exactly one parent
