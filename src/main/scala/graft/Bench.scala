@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round benchmark (driver contract: ONE JSON line). Two parts:
   *
-  *  1. every `SparkEntry.queries` entry timed once (suite seconds);
+  *  1. every `SparkEntry.queries` entry timed once, every output column
+  *     computed (suite seconds);
   *  2. the HEADLINE job for the north metric (BASELINE.json): spatial-join
   *     + tile-assignment throughput in rows/sec — a fused pipeline over an
   *     R-times replicated image table (cell encode -> res-12 rollup, plus
@@ -19,33 +20,17 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val replicate = sys.env.getOrElse("SPARK_GRAFT_REPLICATE", "100").toInt
     // SPARK_GRAFT_MASTER overrides the master for multi-JVM runs, e.g.
     // local-cluster[4,2,8192] = 4 executor PROCESSES x 2 cores — the
     // sandbox's closest form of the north rule's "N vs 4N executors"
     // (requires SPARK_HOME + SPARK_SCALA_VERSION in the environment).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus * 2)
-      // cached tile frames re-coalesce under AQE instead of fanning every
-      // downstream stage out to cpus*2 micro-tasks (see Verify.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // bucketed STORES are a deliberate design choice (BucketStore): keep
-      // bucketed scans (and with them bucket PRUNING on the bucket key)
-      // even when no downstream operator needs the distribution — the
-      // planner's DisableUnnecessaryBucketedScan would otherwise silently
-      // re-scan all buckets for a single-term posting lookup.
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath",
-        new java.io.File("target/scala-2.13/classes").getAbsolutePath)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER",
+      s"local[${GraftSession.cores}]")
+    val spark = GraftSession.start(master,
+      if (!master.startsWith("local-cluster")) Nil
+      else Seq("spark.executor.extraClassPath" ->
+        new java.io.File("target/scala-2.13/classes").getAbsolutePath))
 
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()
@@ -67,7 +52,7 @@ object Bench {
       if (headlineOnly) Map.empty
       else SparkEntry.queries.map { case (name, fn) =>
         val (outcome, sec) = time {
-          try Right(fn(spark, sfDir).count())
+          try Right(materialize(fn(spark, sfDir)))
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             Left(String.valueOf(e.getMessage))
@@ -105,7 +90,7 @@ object Bench {
     // Headline tile assignment: count/bytes/bbox rollup (the phash-centroid
     // variant runs in the suite; its 65-counter agg state is 10x the hash
     // map footprint and turns the measurement memory-bound at 32 cores).
-    def assign(df: org.apache.spark.sql.DataFrame) = {
+    def assign(df: DataFrame) = {
       import graft.geo.{functions => G}
       df.withColumn("cell", G.cell_encode(col("lat"), col("lon"), AssignRes))
         .groupBy(col("cell"))
@@ -137,7 +122,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = results.values.collect { case Right(sec) => sec }.sum
     val line =
-      s"""{"metric":"spatial-join + tile-assignment rows/sec","value":$rowsPerSec,"unit":"rows/sec","suite_sec":$total,"query_errors":${errors.size},"queries":$qs,"sf":"$sfDir","cpus":$cpus,"headline":{"rows":$nRows,"replicate":$replicate,"scan_derive_sec":$scanSec,"tile_assign_sec":$assignSec,"pip_join_sec":$pipSec,"rows_per_sec":$rowsPerSec}}"""
+      s"""{"metric":"spatial-join + tile-assignment rows/sec","value":$rowsPerSec,"unit":"rows/sec","suite_sec":$total,"query_errors":${errors.size},"queries":$qs,"sf":"$sfDir","cpus":${GraftSession.cores},"headline":{"rows":$nRows,"replicate":$replicate,"scan_derive_sec":$scanSec,"tile_assign_sec":$assignSec,"pip_join_sec":$pipSec,"rows_per_sec":$rowsPerSec}}"""
     println(line)
     // The driver captures a fixed-size TAIL of stdout, which truncated the
     // 120-query map in past rounds (VERDICT r4 task 5). Persist the full
@@ -156,4 +141,10 @@ object Bench {
       sys.exit(1)
     }
   }
+
+  /** Run `df` to the end with every output column computed: a `count()`
+    * lets the optimizer prune the columns it does not need, and with them
+    * most of a wide query's work. */
+  def materialize(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 }

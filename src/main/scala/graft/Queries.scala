@@ -757,13 +757,14 @@ object Queries {
   }
 
   /** Drop every memoized shared frame (kNN ranked set, res-8 leaves,
-    * retrieval pyramid) — call after regenerating a fixture dir
-    * in-session. */
+    * AkNN, onion layers, flow routing, retrieval pyramid, k-means sweep)
+    * — call after regenerating a fixture dir in-session. */
   def clearSharedCaches(): Unit = {
     knnRankedCache.clear()
     leaf8Cache.clear()
     aknnCache.clear()
     onionCache.clear()
+    watershedCache.clear()
     QueriesRetrieval.clearPyramidCache()
     KmeansAssign.clearSweepCache()
   }

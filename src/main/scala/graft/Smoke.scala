@@ -1,27 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-style smoke check: run SparkEntry.entry and assert rows > 0.
   * Mirrors what the round driver does at t1 on sf0.001. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // bucketed STORES are a deliberate design choice (BucketStore): keep
-      // bucketed scans (and with them bucket PRUNING on the bucket key)
-      // even when no downstream operator needs the distribution — the
-      // planner's DisableUnnecessaryBucketedScan would otherwise silently
-      // re-scan all buckets for a single-term posting lookup.
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     val df = SparkEntry.entry(spark)
     df.show(20, truncate = false)
     val n = df.count()

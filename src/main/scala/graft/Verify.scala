@@ -1,32 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Let AQE re-coalesce the output partitioning of CACHED plans: the
-      // snapshot/merge operators persist tile-sized frames (|cells| rows),
-      // which otherwise keep the full shuffle-partition fan-out and turn
-      // every downstream stage into hundreds of micro-tasks (measured:
-      // warm mergeDelta 10.7 s -> 5.5 s at sf0.1/64 partitions).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // bucketed STORES are a deliberate design choice (BucketStore): keep
-      // bucketed scans (and with them bucket PRUNING on the bucket key)
-      // even when no downstream operator needs the distribution — the
-      // planner's DisableUnnecessaryBucketedScan would otherwise silently
-      // re-scan all buckets for a single-term posting lookup.
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (the driver never sets this): comma-separated
     // query names to dump; oracle_sql.json is filtered to match so

@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Per-query latency/volume metrics — the "cell-count/latency metrics"
   * sink of the north rule, as a reusable operator rather than a dev tool:
   * run any job under [[capture]] and get one row per stage with wall
-  * time, executor run/CPU/GC time, input/shuffle/output volumes and the
-  * task-duration spread (p50/max — the straggler signal that decides
+  * time, executor run/CPU/GC time, input/shuffle/output/spill volumes and
+  * the task-duration spread (p50/max — the straggler signal that decides
   * whether a stage needs salting or AQE skew handling).
   *
   * Scoping uses a job group: every job started while `f` runs on this
@@ -36,7 +36,8 @@ object QueryMetrics {
       numTasks: Int, wallMs: Long, executorRunMs: Long, executorCpuMs: Long,
       jvmGcMs: Long, inputRecords: Long, inputBytes: Long,
       shuffleReadBytes: Long, shuffleWriteBytes: Long, outputRecords: Long,
-      taskDurP50Ms: Long, taskDurMaxMs: Long)
+      taskDurP50Ms: Long, taskDurMaxMs: Long,
+      memorySpillBytes: Long, diskSpillBytes: Long)
 
   /** Run `f` with its jobs tagged, return (result, per-stage metrics). */
   def capture[A](spark: SparkSession, query: String)(f: => A)
@@ -76,7 +77,8 @@ object QueryMetrics {
             m.shuffleWriteMetrics.bytesWritten,
             m.outputMetrics.recordsWritten,
             if (durs.isEmpty) 0L else durs((durs.size - 1) / 2),
-            if (durs.isEmpty) 0L else durs.last))
+            if (durs.isEmpty) 0L else durs.last,
+            m.memoryBytesSpilled, m.diskBytesSpilled))
         }
       }
     }

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.NearDup
@@ -11,14 +11,12 @@ import graft.similarity.Ann
 import graft.sources.{Fixtures, Images}
 
 /** Regenerate PLANS.md: `explain formatted` output for the flagship plans
-  * (the explain-level audit evidence; PlanSpec asserts the same invariants
-  * as tests). Run: `sbt "runMain graft.tools.PlanDump"`. */
+  * on the shared [[graft.GraftSession]] (the explain-level audit evidence;
+  * PlanSpec asserts the same invariants as tests). Run:
+  * `sbt "runMain graft.tools.PlanDump"`. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.start()
     val dir = "/root/testdata/sf0.001"
     val imgs = Images.images(spark, dir)
 

@@ -79,4 +79,27 @@ class FlowRoutingSpec extends SparkFunSuite {
       }
     }
   }
+
+  test("clearSharedCaches drops the routing memo: a regenerated fixture " +
+    "dir is read again") {
+    import graft.geo.{functions => G}
+    val dir = java.nio.file.Files.createTempDirectory("graft-flow-regen")
+      .toString
+    val li = spark.read.parquet(s"${SparkSpec.Sf}/lineitem.parquet")
+    li.write.parquet(s"$dir/lineitem.parquet")
+    def routed(): Set[Long] =
+      Queries.queryMap("q_flow_watershed")(spark, dir)
+        .collect().map(_.getLong(0)).toSet
+    def occupied(): Set[Long] = graft.sources.Images.images(spark, dir)
+      .select(G.cell_encode(col("lat"), col("lon"), 7)).distinct()
+      .collect().map(_.getLong(0)).toSet
+    val before = routed()
+    assert(before == occupied())
+    li.filter(col("l_orderkey") % 10 === 0)
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    Queries.clearSharedCaches()
+    val after = occupied()
+    assert(after.nonEmpty && after.size < before.size)
+    assert(routed() == after)
+  }
 }

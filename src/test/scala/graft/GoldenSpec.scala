@@ -2,17 +2,13 @@ package graft
 
 import scala.io.Source
 
-import org.apache.spark.sql.functions._
-
-import graft.operators.{SpatialJoin, TilePyramid}
-import graft.sources.Images
-
 /** Committed golden fixture (SURVEY.md §5.4, ≙ the reference's
   * demo/cinderella pickles): the 64-row images_tiny table's res-7 tile
   * assignments and point-in-polygon matches, pinned against
   * src/test/resources/golden_tiny.txt. Catches silent changes to the
   * deterministic derivation chain (key -> anchor -> cell -> summaries)
-  * across rounds. */
+  * across rounds. The lines come from [[GenGolden]], the fixture's
+  * generator. */
 class GoldenSpec extends SparkFunSuite {
 
   private lazy val golden: Seq[String] = {
@@ -22,22 +18,13 @@ class GoldenSpec extends SparkFunSuite {
   }
 
   test("images_tiny res-7 tiles match the committed golden output") {
-    val tiny = Images.imagesTiny(spark)
-    val got = TilePyramid.leafTiles(tiny, 7)
-      .select("cell", "cnt", "bytes_sum", "phash_centroid")
-      .orderBy("cell").collect()
-      .map(r => s"GOLD|${r.getLong(0)}|${r.getLong(1)}|${r.getLong(2)}|${r.getLong(3)}")
-      .toSeq
+    val got = GenGolden.tileLines(spark)
     assert(got == golden.filter(_.startsWith("GOLD|")))
     assert(got.nonEmpty)
   }
 
   test("images_tiny pip join matches the committed golden pairs") {
-    val tiny = Images.imagesTiny(spark)
-    val got = SpatialJoin.pipJoin(tiny, spark)
-      .orderBy("poly_id", "image_id").collect()
-      .map(r => s"GOLDP|${r.getString(0)}|${r.getString(1)}")
-      .toSeq
+    val got = GenGolden.pipLines(spark)
     assert(got == golden.filter(_.startsWith("GOLDP|")))
     assert(got.nonEmpty)
   }
