@@ -706,68 +706,37 @@ object Queries {
 
   /** The three kNN-family queries (top-k + two budget variants) derive from
     * the SAME ranked set — compute the settle loop once per (session, sf
-    * dir) and share the materialized result (VERDICT r2 #3: the suite ran
-    * the identical loop three times). localCheckpoint cuts the loop's
-    * lineage; re-reads are RDD-cache scans, immune to
-    * `catalog.clearCache()` between bench queries.
-    *
-    * CONTRACT: the sf dirs are immutable test fixtures; regenerating a
-    * dir's contents within one session requires [[clearSharedCaches]]
-    * (the memo would otherwise serve the old data). Entries are bounded
-    * by the handful of (session, dir) pairs a process touches; the cap
-    * below guards the pathological many-session JVM. */
-  private val knnRankedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def knnRanked(s: SparkSession, dir: String): DataFrame = {
-    if (knnRankedCache.size > 8) knnRankedCache.clear()
-    knnRankedCache.getOrElseUpdate((s, dir),
+    * dir) and share the materialized result through [[SharedFrames]]
+    * (VERDICT r2 #3: the suite ran the identical loop three times).
+    * localCheckpoint cuts the loop's lineage; re-reads are RDD-cache scans,
+    * immune to `catalog.clearCache()` between bench queries. */
+  private[graft] def knnRanked(s: SparkSession, dir: String): DataFrame =
+    SharedFrames("knnRanked", s, dir)(
       Knn.knnExact(Images.images(s, dir), Fixtures.knnQueries(s), KnnK)
         .localCheckpoint(true))
-  }
 
   /** The AkNN edge list (k=3, res 8) feeds FOUR queries — q_knn_join,
     * q_mutual_knn, q_pagerank, q_label_prop — and its hot-cell join is
     * the single most expensive derivation in the suite (131.9 s for
     * q_knn_join at sf0.1 in the `graft.Bench` suite, `BENCH_r05.json`, even
-    * after the salted+TopK rewrite); same memo contract as [[knnRanked]]
+    * after the salted+TopK rewrite); shared through [[SharedFrames]]
     * ([[Knn.knnSelfJoin]] returns its result already checkpointed). */
-  private val aknnCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def aknnRanked(s: SparkSession, dir: String): DataFrame = {
-    if (aknnCache.size > 8) aknnCache.clear()
-    aknnCache.getOrElseUpdate((s, dir),
+  private[graft] def aknnRanked(s: SparkSession, dir: String): DataFrame =
+    SharedFrames("aknnRanked", s, dir)(
       Knn.knnSelfJoin(Images.images(s, dir), 3, 8))
-  }
 
   /** The res-8 leaf-tile table is the input of FOUR queries
     * (q_resume_res6, q_files_prune, q_pair_merge, q_merge_tree2 — the
     * snapshot/merge family), each of which previously re-derived it with
     * its own corpus scan + 70-aggregate rollup (VERDICT r4 task 8: ~22%
-    * of the suite). Same memo contract as [[knnRanked]]: one derivation
-    * per (session, dir), localCheckpoint so re-reads are RDD-cache scans
-    * immune to the bench's `catalog.clearCache()`. The frame is tiny
-    * (≤ 4^8 cells x ~70 columns), so the resident cost is noise; what it
-    * saves is three corpus scans. */
-  private val leaf8Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def leafTiles8(s: SparkSession, dir: String): DataFrame = {
-    if (leaf8Cache.size > 8) leaf8Cache.clear()
-    leaf8Cache.getOrElseUpdate((s, dir),
+    * of the suite). [[SharedFrames]] holds one derivation per (session,
+    * dir), localCheckpoint so re-reads are RDD-cache scans immune to the
+    * bench's `catalog.clearCache()`. The frame is tiny (≤ 4^8 cells x ~70
+    * columns), so the resident cost is noise; what it saves is three
+    * corpus scans. */
+  private[graft] def leafTiles8(s: SparkSession, dir: String): DataFrame =
+    SharedFrames("leafTiles8", s, dir)(
       TilePyramid.leafTiles(Images.images(s, dir), 8).localCheckpoint(true))
-  }
-
-  /** Drop every memoized shared frame (kNN ranked set, res-8 leaves,
-    * AkNN, onion layers, flow routing, retrieval pyramid, k-means sweep)
-    * — call after regenerating a fixture dir in-session. */
-  def clearSharedCaches(): Unit = {
-    knnRankedCache.clear()
-    leaf8Cache.clear()
-    aknnCache.clear()
-    onionCache.clear()
-    watershedCache.clear()
-    QueriesRetrieval.clearPyramidCache()
-    KmeansAssign.clearSweepCache()
-  }
 
   /** Exact kNN: ring expansion + window top-k; the oracle is the brute-force
     * cross join — equality proves ring pruning is lossless (≙ reference's
@@ -2415,16 +2384,12 @@ object Queries {
     * groupBy. The iterated plan is cut per round with localCheckpoint
     * (the Components.scala pointer-jump device) so lineage stays flat. */
   /** Shared engine for [[qOnionLayers]] and [[qMedialAxis]]: the K = 24
-    * k = 6 peel run to completion, returning (cell, layer). Memoized per
-    * (session, dir) under the [[knnRanked]] contract — the 24-round loop
-    * is job-count-heavy (each round a localCheckpoint), and the medial
-    * axis reads the SAME layers, so one derivation serves both. */
-  private val onionCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def onion6(s: SparkSession, dir: String): DataFrame = {
-    if (onionCache.size > 8) onionCache.clear()
-    onionCache.getOrElseUpdate((s, dir), onion6Derive(s, dir))
-  }
+    * k = 6 peel run to completion, returning (cell, layer). Shared per
+    * (session, dir) through [[SharedFrames]] — the 24-round loop is
+    * job-count-heavy (each round a localCheckpoint), and the medial axis
+    * reads the SAME layers, so one derivation serves both. */
+  private def onion6(s: SparkSession, dir: String): DataFrame =
+    SharedFrames("onion6", s, dir)(onion6Derive(s, dir))
 
   // Round-5 perf note: the original peel chained 24 eager localCheckpoints
   // (each round's frame checkpointed from the previous round's checkpoint).
@@ -5120,21 +5085,16 @@ object Queries {
     * recursive CTE; a hash match therefore proves the doubled composition
     * equals the sequential walk on every cell. All integer end-to-end. */
   /** One routing pass serves the THREE hydrology queries (q_flow_watershed,
-    * q_flow_accum, q_basin_stats) — the [[knnRanked]] memo contract:
-    * resolved pointers + the cell counts, localCheckpoint'ed per
-    * (session, dir). */
-  private val watershedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def watershedMemo(s: SparkSession, dir: String): DataFrame = {
-    if (watershedCache.size > 8) watershedCache.clear()
-    watershedCache.getOrElseUpdate((s, dir), {
+    * q_flow_accum, q_basin_stats) through [[SharedFrames]]: resolved
+    * pointers + the cell counts, localCheckpoint'ed per (session, dir). */
+  private def watershedMemo(s: SparkSession, dir: String): DataFrame =
+    SharedFrames("watershedMemo", s, dir) {
       import graft.geo.{functions => G}
       val g = Images.images(s, dir)
         .withColumn("cell", G.cell_encode(col("lat"), col("lon"), 7))
         .groupBy("cell").agg(count(lit(1)).as("cnt"))
       FlowRouting.watershed(g).join(g, Seq("cell")).localCheckpoint(true)
-    })
-  }
+    }
 
   private val qFlowWatershed = Q(
     "q_flow_watershed",
@@ -6203,10 +6163,18 @@ object Queries {
        |  FROM allk CROSS JOIN (SELECT CAST(count(*) AS BIGINT) AS n FROM pts) n0)""".stripMargin
   }
 
+  /** q_bic_k and q_kmeans_auto consume the SAME candidate fits, so the
+    * sweep is run once per (session, dir) through [[SharedFrames]]. The
+    * value is a handful of driver-side scalars and centroids, not a
+    * DataFrame, so there is no Spark cache lifetime to manage. */
+  private def kmeansSweep(s: SparkSession, dir: String): KmeansAssign.Sweep =
+    SharedFrames("kmeansSweep", s, dir)(
+      KmeansAssign.sweepScored(Images.images(s, dir)))
+
   private val qBicK = Q(
     "q_bic_k",
     (s, dir) => KmeansAssign.bicSweep(Images.images(s, dir),
-      memoKey = Some(dir)),
+      kmeansSweep(s, dir)),
     Some(
       s"""$cte,
          |${bicScoredCtesSql(KmeansAssign.DefaultIters)}
@@ -6224,7 +6192,7 @@ object Queries {
   private val qKmeansAuto = Q(
     "q_kmeans_auto",
     (s, dir) => KmeansAssign.assignAuto(Images.images(s, dir),
-      memoKey = Some(dir)),
+      kmeansSweep(s, dir)),
     Some {
       val iters = KmeansAssign.DefaultIters
       val assigns = KmeansAssign.BicKs

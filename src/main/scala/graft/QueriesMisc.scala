@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,6 +17,18 @@ object QueriesMisc {
 
   private val cte = Images.oracleCte
   private def cellSql(res: Int) = Images.oracleCellSql("lat", "lon", res)
+
+  /** Every row of `images` with its decoded `n×n` RGB thumbnail as
+    * `thumb`, and the gray sum (R + G + B as BIGINT, 0..765) of thumb
+    * pixel `p` — the input of every gray-level raster query. */
+  private def grayThumbs(images: DataFrame,
+                         n: Int): (DataFrame, Int => Column) = (
+    images.withColumn("thumb", M.raster_resize(
+      M.raster_decode(col("bytes"), col("fmt")),
+      col("w"), col("h"), lit(n), lit(n))),
+    p => (M.byte_at(col("thumb"), lit(3 * p)) +
+      M.byte_at(col("thumb"), lit(3 * p + 1)) +
+      M.byte_at(col("thumb"), lit(3 * p + 2))).cast("long"))
 
   // ------------------------------------------------------ multimodal fidelity
 
@@ -95,15 +107,8 @@ object QueriesMisc {
   private val qOtsuThreshold = Q(
     "q_otsu_threshold",
     (s, dir) => {
-      val thumb = Images.imagesWithBytes(s, dir)
-        .withColumn("thumb", M.raster_resize(
-          M.raster_decode(col("bytes"), col("fmt")),
-          col("w"), col("h"), lit(4), lit(4)))
-      val grays = array((0 until 16).map { p =>
-        (M.byte_at(col("thumb"), lit(3 * p)) +
-          M.byte_at(col("thumb"), lit(3 * p + 1)) +
-          M.byte_at(col("thumb"), lit(3 * p + 2))).cast("long")
-      }: _*)
+      val (thumb, gray) = grayThumbs(Images.imagesWithBytes(s, dir), 4)
+      val grays = array((0 until 16).map(gray): _*)
       val hist = thumb.select(col("image_id"), explode(grays).as("g"))
         .groupBy(col("image_id"), col("g"))
         .agg(count(lit(1)).as("cnt"))
@@ -175,14 +180,7 @@ object QueriesMisc {
       val bayer = Seq(
         Seq(0, 8, 2, 10), Seq(12, 4, 14, 6),
         Seq(3, 11, 1, 9), Seq(15, 7, 13, 5))
-      val thumb = Images.imagesWithBytes(s, dir)
-        .withColumn("thumb", M.raster_resize(
-          M.raster_decode(col("bytes"), col("fmt")),
-          col("w"), col("h"), lit(8), lit(8)))
-      def gray(p: Int) =
-        (M.byte_at(col("thumb"), lit(3 * p)) +
-          M.byte_at(col("thumb"), lit(3 * p + 1)) +
-          M.byte_at(col("thumb"), lit(3 * p + 2))).cast("long")
+      val (thumb, gray) = grayThumbs(Images.imagesWithBytes(s, dir), 8)
       def on(p: Int) = {
         val thr = 765L * (2L * bayer(p / 8 % 4)(p % 8 % 4) + 1L)
         when(gray(p) * 32L > thr, 1L).otherwise(0L)
@@ -229,15 +227,8 @@ object QueriesMisc {
   private val qRleRuns = Q(
     "q_rle_runs",
     (s, dir) => {
-      val thumb = Images.imagesWithBytes(s, dir)
-        .withColumn("thumb", M.raster_resize(
-          M.raster_decode(col("bytes"), col("fmt")),
-          col("w"), col("h"), lit(8), lit(8)))
-      val grays = array((0 until 64).map { p =>
-        (M.byte_at(col("thumb"), lit(3 * p)) +
-          M.byte_at(col("thumb"), lit(3 * p + 1)) +
-          M.byte_at(col("thumb"), lit(3 * p + 2))).cast("long")
-      }: _*)
+      val (thumb, gray) = grayThumbs(Images.imagesWithBytes(s, dir), 8)
+      val grays = array((0 until 64).map(gray): _*)
       val px = thumb.select(col("image_id"),
         posexplode(grays).as(Seq("pos", "g")))
       val w = Window.partitionBy("image_id").orderBy("pos")
@@ -306,14 +297,8 @@ object QueriesMisc {
   private val qGlcmTexture = Q(
     "q_glcm_texture",
     (s, dir) => {
-      val thumb = Images.imagesWithBytes(s, dir)
-        .withColumn("thumb", M.raster_resize(
-          M.raster_decode(col("bytes"), col("fmt")),
-          col("w"), col("h"), lit(8), lit(8)))
-      def lvl(p: Int) = shiftright(
-        (M.byte_at(col("thumb"), lit(3 * p)) +
-          M.byte_at(col("thumb"), lit(3 * p + 1)) +
-          M.byte_at(col("thumb"), lit(3 * p + 2))).cast("long"), 7)
+      val (thumb, gray) = grayThumbs(Images.imagesWithBytes(s, dir), 8)
+      def lvl(p: Int) = shiftright(gray(p), 7)
       val pairs = array((for { y <- 0 until 8; x <- 0 until 7 } yield
         struct(lvl(y * 8 + x).as("qa"), lvl(y * 8 + x + 1).as("qb"))): _*)
       thumb.select(col("image_id"), explode(pairs).as("pr"))
@@ -364,15 +349,8 @@ object QueriesMisc {
   private val qSeamCarve = Q(
     "q_seam_carve",
     (s, dir) => {
-      val thumb = Images.imagesWithBytes(s, dir)
-        .withColumn("thumb", M.raster_resize(
-          M.raster_decode(col("bytes"), col("fmt")),
-          col("w"), col("h"), lit(8), lit(8)))
-      val grays = array((0 until 64).map { p =>
-        (M.byte_at(col("thumb"), lit(3 * p)) +
-          M.byte_at(col("thumb"), lit(3 * p + 1)) +
-          M.byte_at(col("thumb"), lit(3 * p + 2))).cast("long")
-      }: _*)
+      val (thumb, gray) = grayThumbs(Images.imagesWithBytes(s, dir), 8)
+      val grays = array((0 until 64).map(gray): _*)
       var df = thumb.select(col("image_id"), grays.as("ga"))
         .withColumn("dp0", expr("slice(ga, 1, 8)"))
       for (r <- 1 to 7) df = df.withColumn(s"dp$r", expr(
@@ -431,16 +409,9 @@ object QueriesMisc {
   private val qBlobLabels = Q(
     "q_blob_labels",
     (s, dir) => {
-      val base = Images.imagesWithBytes(s, dir)
-        .where(col("k") % 50 === 0)
-        .withColumn("thumb", M.raster_resize(
-          M.raster_decode(col("bytes"), col("fmt")),
-          col("w"), col("h"), lit(8), lit(8)))
-      val grays = array((0 until 64).map { p =>
-        (M.byte_at(col("thumb"), lit(3 * p)) +
-          M.byte_at(col("thumb"), lit(3 * p + 1)) +
-          M.byte_at(col("thumb"), lit(3 * p + 2))).cast("long")
-      }: _*)
+      val (base, gray) = grayThumbs(
+        Images.imagesWithBytes(s, dir).where(col("k") % 50 === 0), 8)
+      val grays = array((0 until 64).map(gray): _*)
       val mask = base
         .select(col("k"), col("image_id"), posexplode(grays).as(Seq("pos", "g")))
         .where(col("g") >= 384)
@@ -520,14 +491,7 @@ object QueriesMisc {
   private val qBitplaneComplexity = Q(
     "q_bitplane_complexity",
     (s, dir) => {
-      val thumb = Images.imagesWithBytes(s, dir)
-        .withColumn("thumb", M.raster_resize(
-          M.raster_decode(col("bytes"), col("fmt")),
-          col("w"), col("h"), lit(8), lit(8)))
-      def gray(p: Int) =
-        (M.byte_at(col("thumb"), lit(3 * p)) +
-          M.byte_at(col("thumb"), lit(3 * p + 1)) +
-          M.byte_at(col("thumb"), lit(3 * p + 2))).cast("long")
+      val (thumb, gray) = grayThumbs(Images.imagesWithBytes(s, dir), 8)
       val hp = for { y <- 0 until 8; x <- 0 until 7 }
         yield (y * 8 + x, y * 8 + x + 1)
       val vp = for { y <- 0 until 7; x <- 0 until 8 }

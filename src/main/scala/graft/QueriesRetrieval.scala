@@ -29,24 +29,16 @@ object QueriesRetrieval {
 
   /** The three retrieval queries all consume the SAME derived pyramid
     * (levels 4..8) — materialize it once per (session, sf dir) and share
-    * it (the knnRanked pattern): each query then filters its level range
+    * it through [[SharedFrames]]: each query then filters its level range
     * from a 40k-row checkpointed frame instead of re-running the pyramid
     * aggregation. */
-  private val pyramidCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
   private def sharedPyramid(s: org.apache.spark.sql.SparkSession,
-                            dir: String): org.apache.spark.sql.DataFrame = {
-    if (pyramidCache.size > 8) pyramidCache.clear()
+                            dir: String): org.apache.spark.sql.DataFrame =
     // SLIM build: retrieval reads count/bbox only — materializing the full
     // pyramid's 65-column phash state tripled the checkpoint cost
-    pyramidCache.getOrElseUpdate((s, dir),
+    SharedFrames("sharedPyramid", s, dir)(
       TilePyramid.pyramidLazySlim(Images.images(s, dir),
         DescendStart, DescendEnd).localCheckpoint(true))
-  }
-
-  /** See Queries.clearSharedCaches — fixture-regeneration escape hatch. */
-  private[graft] def clearPyramidCache(): Unit = pyramidCache.clear()
 
   /** Squared distance from (qlat, qlon) to the tile bbox center — mirrors
     * [[Retrieval.centerDistSq]] op-for-op. */

@@ -47,6 +47,13 @@ object Components {
                           maxIters: Int = 30): DataFrame =
     ccWithIters(nodes, edges, maxIters)._1
 
+  /** The RDD behind a `localCheckpoint`ed frame (its `LogicalRDD` leaf):
+    * the handle a loop unpersists once the next round is materialized. */
+  private[graft] def ckptRdd(df: DataFrame) =
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
+
   /** [[connectedComponents]] plus the number of rounds taken — the spec's
     * handle on the pointer-jump convergence rate.
     *
@@ -63,9 +70,6 @@ object Components {
     * checkpoint every N rounds — same loop, executor-loss-safe. */
   private[graft] def ccWithIters(nodes: DataFrame, edges: DataFrame,
                                  maxIters: Int): (DataFrame, Int) = {
-    def ckptRdd(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
     // bidirectional edges in ONE pass over the caller's (possibly
     // expensive) edge plan — a union of two selects would execute it once
     // per branch (ReuseExchange shares only the shuffles, not post-shuffle

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.dedup.Components.ckptRdd
+
 /** D8-style FLOW ROUTING + WATERSHED LABELING over the occupied density
   * grid — the hydrology operator family (flow direction, pit detection,
   * basin delineation) applied to the density raster: "water" flows from
@@ -61,9 +63,6 @@ object FlowRouting {
     // eager checkpoint: the pointer table seeds the loop AND joins the
     // final output — one materialization serves both without recompute
     val d = downstream(g).localCheckpoint(true)
-    def ckptRdd(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
     // jump table: (cell -> nxt, steps); pits self-loop at distance 0, so
     // composition is the identity once a path has resolved
     var j = d.select(col("cell"),

@@ -178,35 +178,24 @@ object KmeansAssign {
   private[graft] case class Scored(k: Int, cents: Seq[Centroid], sseQ: BigInt,
                                    bic: Double)
 
-  /** Memoized sweep results: q_bic_k and q_kmeans_auto consume the SAME
-    * candidate fits (the knnRanked sharing pattern — VERDICT r2 #3 class);
-    * the cached value is a handful of driver-side scalars/centroids, not a
-    * DataFrame, so there is no Spark cache lifetime to manage. Key includes
-    * the caller's fixture-dir token plus (ks, iters); same immutable-fixture
-    * contract as Queries' shared frames ([[clearSweepCache]] is the
-    * regeneration escape hatch). */
-  private val sweepCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Seq[Int], Int),
-      (Long, Seq[Scored])]
-  private[graft] def clearSweepCache(): Unit = sweepCache.clear()
+  /** A finished sweep: the anchor count and every candidate's fit. */
+  private[graft] type Sweep = (Long, Seq[Scored])
 
-  private def sweptFor(images: DataFrame, memoKey: Option[String],
-                       ks: Seq[Int], iters: Int): (Long, Seq[Scored]) = {
-    def compute(): (Long, Seq[Scored]) = {
-      val pts = points(images)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = pts.count()
-        (n, sweepScores(pts, ks, iters, n))
-      } finally pts.unpersist(blocking = false)
-    }
-    memoKey match {
-      case Some(key) =>
-        if (sweepCache.size > 8) sweepCache.clear()
-        sweepCache.getOrElseUpdate(
-          (images.sparkSession, key, ks, iters), compute())
-      case None => compute()
-    }
+  /** Runs the sweep: the anchor projection is persisted for its jobs and
+    * released on return. Nothing is memoized here; a caller that reuses
+    * one sweep (q_bic_k and q_kmeans_auto) keeps it through
+    * [[graft.SharedFrames]] and hands it to the `sweep` overloads of
+    * [[bicSweep]] and [[assignAuto]]. Also the spec's access to the raw
+    * per-candidate scores (including the BIC double, which [[bicSweep]]
+    * deliberately keeps OUT of its output). */
+  private[graft] def sweepScored(images: DataFrame, ks: Seq[Int] = BicKs,
+                                 iters: Int = DefaultIters): Sweep = {
+    val pts = points(images)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = pts.count()
+      (n, sweepScores(pts, ks, iters, n))
+    } finally pts.unpersist(blocking = false)
   }
 
   /** The sweep core over a PERSISTED pts frame, BATCHED across candidates:
@@ -276,19 +265,16 @@ object KmeansAssign {
     }
   }
 
-  /** Spec access to the raw per-candidate scores (including the BIC
-    * double, which [[bicSweep]] deliberately keeps OUT of its output). */
-  private[graft] def sweepScored(images: DataFrame, ks: Seq[Int] = BicKs,
-                                 iters: Int = DefaultIters): (Long, Seq[Scored]) =
-    sweptFor(images, None, ks, iters)
-
   def bicSweep(images: DataFrame, ks: Seq[Int] = BicKs,
-               iters: Int = DefaultIters,
-               memoKey: Option[String] = None): DataFrame = {
+               iters: Int = DefaultIters): DataFrame =
+    bicSweep(images, sweepScored(images, ks, iters))
+
+  /** [[bicSweep]]'s table from a sweep already run. */
+  private[graft] def bicSweep(images: DataFrame, sweep: Sweep): DataFrame = {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val (n, scored) = sweptFor(images, memoKey, ks, iters)
+    val (n, scored) = sweep
     val bestK = scored.minBy(s => (s.bic, s.k)).k
     // sse_q is exact at any scale (see BicScale) and emitted as its two
     // BIGINT halves (graft.agg.E18): a DECIMAL renders engine-dependently.
@@ -319,10 +305,12 @@ object KmeansAssign {
     * won. Same scale shape as [[bicSweep]] plus one final map-only
     * assignment scan. */
   def assignAuto(images: DataFrame, ks: Seq[Int] = BicKs,
-                 iters: Int = DefaultIters,
-                 memoKey: Option[String] = None): DataFrame = {
-    val (_, scored) = sweptFor(images, memoKey, ks, iters)
-    val best = scored.minBy(s => (s.bic, s.k))
+                 iters: Int = DefaultIters): DataFrame =
+    assignAuto(images, sweepScored(images, ks, iters))
+
+  /** [[assignAuto]]'s labels from a sweep already run. */
+  private[graft] def assignAuto(images: DataFrame, sweep: Sweep): DataFrame = {
+    val best = sweep._2.minBy(s => (s.bic, s.k))
     points(images).withColumn("cid", nearestCid(best.cents))
       .select(col("image_id"), col("cid"), lit(best.k).as("k"))
   }

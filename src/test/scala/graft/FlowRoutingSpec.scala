@@ -80,8 +80,7 @@ class FlowRoutingSpec extends SparkFunSuite {
     }
   }
 
-  test("clearSharedCaches drops the routing memo: a regenerated fixture " +
-    "dir is read again") {
+  test("SharedFrames.clear() lets a regenerated fixture dir be read again") {
     import graft.geo.{functions => G}
     val dir = java.nio.file.Files.createTempDirectory("graft-flow-regen")
       .toString
@@ -97,7 +96,7 @@ class FlowRoutingSpec extends SparkFunSuite {
     assert(before == occupied())
     li.filter(col("l_orderkey") % 10 === 0)
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    Queries.clearSharedCaches()
+    SharedFrames.clear()
     val after = occupied()
     assert(after.nonEmpty && after.size < before.size)
     assert(routed() == after)

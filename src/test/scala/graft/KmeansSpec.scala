@@ -76,16 +76,21 @@ class KmeansSpec extends SparkFunSuite {
   test("BIC sweep: one row per k, exact SSE, argmin flagged once") {
     val imgs = Images.images(spark, SparkSpec.Sf)
     val ks = Seq(1, 2, 3)
-    val rows = KmeansAssign.bicSweep(imgs, ks, Iters).collect()
+    val swept = KmeansAssign.sweepScored(imgs, ks, Iters)
+    val rows = KmeansAssign.bicSweep(imgs, swept).collect()
       .map(r => (r.getInt(0), r.getLong(1), e18(r, 2), r.getInt(4)))
       .sortBy(_._1)
+    // the self-sweeping entry point emits the same table
+    assert(KmeansAssign.bicSweep(imgs, ks, Iters).collect()
+      .map(r => (r.getInt(0), r.getLong(1), e18(r, 2), r.getInt(4)))
+      .sortBy(_._1).toSeq == rows.toSeq)
     assert(rows.map(_._1).toSeq == ks)
     val n = anchors.length.toLong
     assert(rows.forall(_._2 == n))
     // the internal per-candidate scores (the BIC double is deliberately
     // absent from bicSweep's output — transcendental doubles don't
     // hash-compare cross-engine; see bicSweep scaladoc)
-    val (_, scored) = KmeansAssign.sweepScored(imgs, ks, Iters)
+    val (_, scored) = swept
     val bicByK = scored.map(s => s.k -> s.bic).toMap
     // exact SSE recomputation per k with the operator's arithmetic,
     // against the SAME driver-side Lloyd used by the fixed-k parity test
@@ -112,12 +117,16 @@ class KmeansSpec extends SparkFunSuite {
   test("assignAuto labels under the argmin-BIC model") {
     val imgs = Images.images(spark, SparkSpec.Sf)
     val ks = Seq(1, 2, 3)
-    val sweep = KmeansAssign.bicSweep(imgs, ks, Iters).collect()
+    val swept = KmeansAssign.sweepScored(imgs, ks, Iters)
+    val sweep = KmeansAssign.bicSweep(imgs, swept).collect()
       .map(r => (r.getInt(0), r.getInt(4)))
     val bestK = sweep.find(_._2 == 1).get._1
     val auto = KmeansAssign.assignAuto(imgs, ks, Iters)
     val got = auto.collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2)))
     assert(got.forall(_._3 == bestK))
+    // labelling from the sweep already run gives the same rows
+    assert(KmeansAssign.assignAuto(imgs, swept).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet == got.toSet)
     // labels equal a direct fixed-k fit at the winning k
     val want = KmeansAssign.assign(imgs, bestK, Iters).collect()
       .map(r => r.getString(0) -> r.getInt(1)).toMap

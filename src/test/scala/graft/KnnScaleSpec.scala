@@ -51,7 +51,10 @@ class KnnScaleSpec extends SparkFunSuite {
   }
 
   test("reverse kNN is an exact inversion of the ranked set") {
-    val ranked = Queries.knnRanked(spark, SparkSpec.Sf).collect()
+    val shared = Queries.knnRanked(spark, SparkSpec.Sf)
+    // one derivation per (session, dir): a second read is the same frame
+    assert(Queries.knnRanked(spark, SparkSpec.Sf) eq shared)
+    val ranked = shared.collect()
     val got = Queries.queryMap("q_reverse_knn")(spark, SparkSpec.Sf)
       .collect()
       .map(r => r.getString(0) ->
