@@ -330,7 +330,7 @@ object Queries {
     * with cum ≥ ⌈k·n/4⌉), and the bucket is `1 + Σ_k [x > boundary_k]`
     * — pure integer comparisons against 9 driver-held scalars (the
     * Lloyd/codebook driver-state pattern). A global rank window would
-    * funnel all users through one task (the PlanSpec pin); the
+    * funnel all users through one task (a SignatureSpec rule); the
     * histogram route is cumulation over the DISTINCT-VALUE lattice,
     * whose size is domain-bounded (days / per-user counts / milli
     * sums), not user-bounded.
@@ -965,7 +965,7 @@ object Queries {
   private val qResumeRes6 = Q(
     "q_resume_res6",
     (s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft-snap").toString
+      val root = SnapRoots.fresh()
       // res-8 leaves: the same write -> partition-pruned read -> rebuild
       // path at a fraction of the IO (the res-12 variant spent ~9.5 s of
       // the suite writing 450k leaf rows; resume semantics are identical).
@@ -987,27 +987,12 @@ object Queries {
          |FROM (SELECT ${cellSql(6)} AS cell, * FROM images) t
          |GROUP BY cell""".stripMargin))
 
-  /** Snapshot TIME TRAVEL (the Iceberg semantic the north rule's
-    * "resumable from Iceberg-snapshot checkpoints" implies): two versioned
-    * builds land under one root ([[Snapshot.writeVersioned]] — append
-    * under a snapshot_id partition), and a reader pinned to v1 still sees
-    * EXACTLY the v1 tiles after v2 lands (only v1's files are even
-    * listed). The output unions both pinned reads tagged by snapshot; the
-    * oracle recomputes each version's tile set from the raw corpus, so a
-    * hash match proves versions neither leak into each other nor drift.
-    * Both versions derive from ONE corpus pass (the qStatsTransfer
-    * extraKeys device): v1 is the half-0 slice of the (cell, half)
-    * partials, v2 re-aggregates the partials — count/byte sums are
-    * associative, so the merge is exact. */
-  /** Scratch roots for [[qTimeTravel]]: each invocation needs a FRESH root
+  /** Per-query scratch snapshot roots: each invocation needs a FRESH root
     * (committed snapshot ids are immutable, so a reused root would refuse
-    * the v1/v2 re-commit), but an unbounded trail of materialized parquet
-    * under /tmp is a leak — so each new build deletes the previous
-    * invocation's root (the driver contract consumes each query's result
-    * before building the next), and a shutdown hook removes the last. */
-  /** Per-query scratch snapshot root: each fresh() drops the previous run's
-    * directory (bench loops would otherwise accumulate), and a shutdown
-    * hook GCs the last one. */
+    * a re-commit), but an unbounded trail of materialized parquet under
+    * /tmp is a leak — so each fresh() deletes the previous invocation's
+    * root (the driver contract consumes each query's result before
+    * building the next), and a shutdown hook removes the last. */
   private final class ScratchRoots(prefix: String) {
     private var last: Option[java.nio.file.Path] = None
     private def drop(p: java.nio.file.Path): Unit =
@@ -1025,6 +1010,9 @@ object Queries {
   private val TtRoots = new ScratchRoots("graft-tt")
   private val DmRoots = new ScratchRoots("graft-dm")
   private val TagRoots = new ScratchRoots("graft-tag")
+  private val SnapRoots = new ScratchRoots("graft-snap")
+  private val XferRoots = new ScratchRoots("graft-xfer")
+  private val MigRoots = new ScratchRoots("graft-mig")
 
   /** NAMED SNAPSHOT REFS (tags) — the deploy-pin semantic on top of time
     * travel ([[qTimeTravel]] reads by raw version id; real consumers pin
@@ -1080,6 +1068,18 @@ object Queries {
          |${half("latest", "")}""".stripMargin
     })
 
+  /** Snapshot TIME TRAVEL (the Iceberg semantic the north rule's
+    * "resumable from Iceberg-snapshot checkpoints" implies): two versioned
+    * builds land under one root ([[Snapshot.writeVersioned]] — append
+    * under a snapshot_id partition), and a reader pinned to v1 still sees
+    * EXACTLY the v1 tiles after v2 lands (only v1's files are even
+    * listed). The output unions both pinned reads tagged by snapshot; the
+    * oracle recomputes each version's tile set from the raw corpus, so a
+    * hash match proves versions neither leak into each other nor drift.
+    * Both versions derive from ONE corpus pass (the qStatsTransfer
+    * extraKeys device): v1 is the half-0 slice of the (cell, half)
+    * partials, v2 re-aggregates the partials — count/byte sums are
+    * associative, so the merge is exact. */
   private val qTimeTravel = Q(
     "q_time_travel", {
       val h = "cast(conv(substring(md5(image_id), 1, 8), 16, 10) as bigint) % 2"
@@ -1248,7 +1248,7 @@ object Queries {
         // tiny aggregated frame instead of re-scanning + re-aggregating
         // the corpus per half (round-2 shape: two full passes).
         val imgs = Images.images(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("graft-xfer").toString
+        val tmp = XferRoots.fresh()
         val both = TilePyramid.leafTiles(imgs.withColumn("half", expr(h)), 7,
             extraKeys = Seq("half"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1289,7 +1289,7 @@ object Queries {
   private val qReadMigrated = Q(
     "q_read_migrated",
     (s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-mig").toString
+      val tmp = MigRoots.fresh()
       val tiles = TilePyramid.withCell(Images.images(s, dir), 7)
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("cnt"),
@@ -3231,7 +3231,7 @@ object Queries {
     * res-7 cell whose cumulative row count reaches ⌈i·N/32⌉. The
     * cumulative distribution uses the q_token_dist device — a keyed
     * histogram plus a BROADCAST range join over the grid-bounded cell
-    * set (PlanSpec forbids partitionless windows suite-wide, and none is
+    * set (SignatureSpec forbids partitionless windows, and none is
     * used here). All integer: targets by ceil-division
     * `(i·N + 31) div 32`, boundaries by min-cell-over-threshold.
     *

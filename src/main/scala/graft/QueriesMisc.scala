@@ -957,9 +957,9 @@ object QueriesMisc {
         .agg(count(lit(1)).as("cnt"))
       // ONE pass: a base-aggregate + dominant-pick LEFT JOIN would replan
       // the decode + Sobel kernel once per branch (the q_image_neardup
-      // double-evaluation trap, caught in the plan audit) — image-keyed
-      // windows over the ≤9-row histogram read it once. Edge rows sort
-      // before flat, so rn=1 IS the dominant edge when any edge exists.
+      // trap; plan_signatures.txt counts the joins) — image-keyed windows
+      // over the ≤9-row histogram read it once. Edge rows sort before
+      // flat, so rn=1 IS the dominant edge when any edge exists.
       val wi = Window.partitionBy("image_id")
       val wr = wi.orderBy(when(col("sector") < 8, 0).otherwise(1),
         col("cnt").desc, col("sector"))
@@ -1048,8 +1048,8 @@ object QueriesMisc {
       // column NON-NULLABLE stops InferFiltersFromConstraints from pushing
       // an isnotnull(dhash56(...)) filter below the dedup aggregates on
       // both join inputs — which would evaluate the query's dominant
-      // kernel (raster synthesis + hash) TWICE per image (caught in the
-      // PLANS.md audit); PlanSpec pins the single evaluation.
+      // kernel (raster synthesis + hash) TWICE per image; PlanSpec pins
+      // the single evaluation (the pushed filter is not in a signature).
       val dh = Images.imagesWithBytes(s, dir)
         .select(col("image_id"),
           coalesce(M.dhash56(M.raster_decode(col("bytes"), col("fmt")),
@@ -1406,8 +1406,8 @@ object QueriesMisc {
     * Spirakis u^(1/w) key would ride on `pow`, whose last ulp is not
     * portable — the q_bic_k lesson). Output is integer/string columns
     * only. Plan: map-only projection + ONE keyed window per cell —
-    * partition-parallel, no global sort (PlanSpec forbids partitionless
-    * windows). */
+    * partition-parallel, no global sort (SignatureSpec forbids
+    * partitionless windows). */
   private val qWeightedSample = Q(
     "q_weighted_sample", {
       val k = 3

@@ -115,6 +115,8 @@ object Knn {
         (col("w") * col("h") * 3).cast("long").as("bytes"))
   }
 
+  /** One settle round: the query rings explode and broadcast, so the leaf
+    * projection shuffles only into the per-query window (PlanSpec). */
   private def rankCandidates(lv: DataFrame, qs: DataFrame, r: Int, k: Int,
                              strategy: TilingStrategy): DataFrame = {
     val cand = qs.withColumn("cell",
@@ -214,7 +216,7 @@ object Knn {
   /** The lazy plan behind [[knnSelfJoin]] (its binned input and hot-cell
     * histogram are checkpointed, the join and top-k are not). Run it only
     * under the raised fallback threshold; outside [[knnSelfJoin]] it is
-    * for plan audits. */
+    * signed in src/test/resources/plan_signatures.txt. */
   private[graft] def selfJoinPlan(images: DataFrame, k: Int, res: Int,
                                   hotThreshold: Long,
                                   salts: Int): DataFrame = {

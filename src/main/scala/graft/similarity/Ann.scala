@@ -474,11 +474,11 @@ object Ann {
 
   /** Embedding near-dup pairs at cosine >= t, SCALE-SAFE: candidates from a
     * banded random-hyperplane LSH equi-join (any shared band), verified with
-    * exact cosine. No theta/nested-loop join anywhere (PlanSpec pins this);
-    * the band join shuffles on (band, sig) and is AQE-splittable when a
-    * bucket runs hot. ≙ the reference's cluster-prefiltered pair search
-    * (raptor/merge_tree_builder.py:247-304) — same prefilter+verify shape
-    * as the text LSH at [[graft.dedup.NearDup.lshNearDupPairs]]. */
+    * exact cosine. No theta/nested-loop join anywhere (q_embed_neardup's
+    * signature pins the joins); the band join shuffles on (band, sig) and
+    * is AQE-splittable when a bucket runs hot. ≙ the reference's cluster-
+    * prefiltered pair search (raptor/merge_tree_builder.py:247-304); same
+    * prefilter+verify shape as [[graft.dedup.NearDup.lshNearDupPairs]]. */
   def lshCosNearDupPairs(spark: SparkSession, dir: String, t: Double): DataFrame = {
     val w = vecs(spark, dir)
     val bands = w

@@ -308,8 +308,8 @@ object QueriesSearch {
     * ([[qBm25]]) for the same terms — the reorderings disagree exactly
     * where length normalization bites, so the fusion is non-trivial.
     *
-    * Ranks are derived WITHOUT a partitionless window (suite-wide
-    * PlanSpec pin): each top-10 frame is bounded by k, so rank =
+    * Ranks are derived WITHOUT a partitionless window (a SignatureSpec
+    * rule): each top-10 frame is bounded by k, so rank =
     * 1 + |better rows| via a broadcast k x k self-join — the bounded
     * theta join, same class as the existing tiny crossJoins. */
   private val qRankFusion = Q(

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -20,7 +18,7 @@ import graft.sources.Images
 class DppSpec extends SparkFunSuite {
 
   test("join on the partition column prunes snapshot levels at runtime") {
-    val root = Files.createTempDirectory("graft-dpp").toString
+    val root = tempDir("graft-dpp")
     val (pyr, _) = TilePyramid.build(Images.images(spark, SparkSpec.Sf), 5, 8)
     Snapshot.write(pyr, root, "dpp", buildTs = 1L)
 

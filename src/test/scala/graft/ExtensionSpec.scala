@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.geo.{functions => G}
@@ -86,7 +84,7 @@ class ExtensionSpec extends SparkFunSuite {
 
   test("bbox conjuncts reach the parquet scan as pushed filters") {
     GraftOptimizations.install(spark)
-    val dir = Files.createTempDirectory("graft-ext-parquet").toString
+    val dir = tempDir("graft-ext-parquet")
     Images.images(spark, SparkSpec.Sf)
       .select("image_id", "lat", "lon").write.mode("overwrite").parquet(dir)
     val poly = Fixtures.polys.find(_.kind == "convex").get

@@ -27,7 +27,7 @@ class FilePruneSpec extends SparkFunSuite {
   private val Hi = (8L << 58) | (191L << 8) | 255L
 
   test("sorted compaction + manifest stats prune files; answer exact") {
-    val root = Files.createTempDirectory("graft-fp-spec").toString
+    val root = tempDir("graft-fp-spec")
     val lv = leaves
     Snapshot.writeVersioned(lv, root, "s1", buildTs = 1L)
     // tiny target so the level splits into several cell-ranged files
@@ -55,7 +55,7 @@ class FilePruneSpec extends SparkFunSuite {
   }
 
   test("pruning is conservative on an UNSORTED layout (correct, no skips)") {
-    val root = Files.createTempDirectory("graft-fp-spec").toString
+    val root = tempDir("graft-fp-spec")
     val lv = leaves
     // shuffle the rows so every file spans ~the whole key space
     Snapshot.writeVersioned(lv.repartition(6, col("phash_centroid")),
@@ -69,7 +69,7 @@ class FilePruneSpec extends SparkFunSuite {
   }
 
   test("empty range prunes everything and returns an empty frame") {
-    val root = Files.createTempDirectory("graft-fp-spec").toString
+    val root = tempDir("graft-fp-spec")
     Snapshot.writeVersioned(leaves, root, "s1", buildTs = 1L)
     Snapshot.compact(spark, root, "s1", targetBytes = 8L << 10,
       sortBy = Seq("cell"))
@@ -81,7 +81,7 @@ class FilePruneSpec extends SparkFunSuite {
   }
 
   test("compaction refreshes an existing stats manifest (never stale)") {
-    val root = Files.createTempDirectory("graft-fp-spec").toString
+    val root = tempDir("graft-fp-spec")
     val lv = leaves
     Snapshot.writeVersioned(lv, root, "s1", buildTs = 1L)
     Snapshot.writeFileStats(spark, root, "s1") // BEFORE the rewrite
@@ -100,7 +100,7 @@ class FilePruneSpec extends SparkFunSuite {
   }
 
   test("expiry deletes the expired version's stats manifest too") {
-    val root = Files.createTempDirectory("graft-fp-spec").toString
+    val root = tempDir("graft-fp-spec")
     val lv = leaves
     Snapshot.writeVersioned(lv, root, "s1", buildTs = 1L)
     Snapshot.writeFileStats(spark, root, "s1")
@@ -110,7 +110,7 @@ class FilePruneSpec extends SparkFunSuite {
   }
 
   test("crashed-compact scratch dirs never enter the manifest") {
-    val root = Files.createTempDirectory("graft-fp-spec").toString
+    val root = tempDir("graft-fp-spec")
     val lv = leaves
     Snapshot.writeVersioned(lv, root, "s1", buildTs = 1L)
     // simulate a compact killed after the scratch write, before the swap:
@@ -128,7 +128,7 @@ class FilePruneSpec extends SparkFunSuite {
   }
 
   test("stale manifest (crash between swap and refresh) falls back to full scan") {
-    val root = Files.createTempDirectory("graft-fp-spec").toString
+    val root = tempDir("graft-fp-spec")
     val lv = leaves
     Snapshot.writeVersioned(lv, root, "s1", buildTs = 1L)
     Snapshot.writeFileStats(spark, root, "s1")
@@ -147,7 +147,7 @@ class FilePruneSpec extends SparkFunSuite {
   }
 
   test("stats manifest round-trips through its JSON file") {
-    val root = Files.createTempDirectory("graft-fp-spec").toString
+    val root = tempDir("graft-fp-spec")
     Snapshot.writeVersioned(leaves, root, "s1", buildTs = 1L)
     val written = Snapshot.writeFileStats(spark, root, "s1")
     assert(Snapshot.readFileStats(root, "s1") == written)

@@ -82,8 +82,7 @@ class FlowRoutingSpec extends SparkFunSuite {
 
   test("SharedFrames.clear() lets a regenerated fixture dir be read again") {
     import graft.geo.{functions => G}
-    val dir = java.nio.file.Files.createTempDirectory("graft-flow-regen")
-      .toString
+    val dir = tempDir("graft-flow-regen")
     val li = spark.read.parquet(s"${SparkSpec.Sf}/lineitem.parquet")
     li.write.parquet(s"$dir/lineitem.parquet")
     def routed(): Set[Long] =

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Lineage, QueryMetrics, TilePyramid}
@@ -15,7 +13,7 @@ import graft.sources.Images
 class LineageMetricsSpec extends SparkFunSuite {
 
   private lazy val twoFileDir: String = {
-    val dir = Files.createTempDirectory("graft-lineage").toString
+    val dir = tempDir("graft-lineage")
     val imgs = Images.images(spark, SparkSpec.Sf)
       .select("image_id", "lat", "lon", "w", "h", "phash")
     // two separate write jobs -> disjoint file sets with shared cells.
@@ -100,7 +98,7 @@ class LineageMetricsSpec extends SparkFunSuite {
     assert(!rows.exists(_.numTasks == 3) || parts == 3)
 
     // report/sink round-trip
-    val sink = Files.createTempDirectory("graft-metrics").toString
+    val sink = tempDir("graft-metrics")
     QueryMetrics.writeSink(spark, rows, sink)
     val back = spark.read.json(sink)
     assert(back.count() == rows.size)

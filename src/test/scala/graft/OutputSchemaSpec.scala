@@ -1,5 +1,7 @@
 package graft
 
+import scala.io.Source
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -9,24 +11,48 @@ import graft.agg.E18
 
 /** Hashed outputs carry no engine-dependent encoding: a DECIMAL column
   * renders differently on Spark and on the DuckDB oracle, so exact wide
-  * sums are emitted as two BIGINT halves ([[E18]]). */
+  * sums are emitted as two BIGINT halves ([[E18]]). Floating-point output
+  * columns are held to the committed list in
+  * src/test/resources/double_columns.txt, which may only shrink. */
 class OutputSchemaSpec extends SparkFunSuite {
 
-  private def hasDecimal(t: DataType): Boolean = t match {
-    case _: DecimalType => true
-    case s: StructType => s.fields.exists(f => hasDecimal(f.dataType))
-    case a: ArrayType => hasDecimal(a.elementType)
-    case m: MapType => hasDecimal(m.keyType) || hasDecimal(m.valueType)
-    case _ => false
-  }
+  /** `t` or a type nested in it satisfies `p`. */
+  private def has(t: DataType)(p: DataType => Boolean): Boolean =
+    p(t) || (t match {
+      case s: StructType => s.fields.exists(f => has(f.dataType)(p))
+      case a: ArrayType => has(a.elementType)(p)
+      case m: MapType => has(m.keyType)(p) || has(m.valueType)(p)
+      case _ => false
+    })
 
   test("no query output schema has a DECIMAL column") {
     val frames = SparkSpec.shippedQueries
-    assert(frames.map(_._1).toSet == SparkEntry.queries.keySet)
+    assert(frames.map(_.name).toSet == SparkEntry.queries.keySet)
     val bad = frames.collect {
-      case (name, df) if hasDecimal(df.schema) => name
+      case s if has(s.df.schema)(_.isInstanceOf[DecimalType]) => s.name
     }
     assert(bad.isEmpty, s"DECIMAL output columns in: ${bad.mkString(", ")}")
+  }
+
+  test("every DOUBLE or FLOAT output column is on the committed list, and " +
+      "every listed column still exists") {
+    val src = Source.fromInputStream(
+      getClass.getResourceAsStream("/double_columns.txt"), "UTF-8")
+    val listed = try src.getLines().filterNot(_.startsWith("#")).toList
+      .map(_.split(" ") match {
+        case Array(q, c, kind) =>
+          assert(kind == "input" || kind == "computed", s"$q $c: kind $kind")
+          (q, c)
+      }) finally src.close()
+    val floating = SparkSpec.shippedQueries.flatMap(s =>
+      s.df.schema.fields.collect {
+        case f if has(f.dataType)(t => t == DoubleType || t == FloatType) =>
+          (s.name, f.name)
+      })
+    val unlisted = floating.filterNot(listed.toSet)
+    val stale = listed.filterNot(floating.toSet)
+    assert(unlisted.isEmpty && stale.isEmpty,
+      s"floating columns not listed: $unlisted; listed but gone: $stale")
   }
 
   test("E18 halves: hi * 10^18 + lo == the exact value, on the engine and " +

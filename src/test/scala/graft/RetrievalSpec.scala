@@ -187,7 +187,7 @@ class RetrievalSpec extends SparkFunSuite {
   }
 
   test("snapshot-backed descent: same result, level scans partition-pruned") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ret-snap").toString
+    val root = tempDir("graft-ret-snap")
     val imgs = Images.images(spark, SparkSpec.Sf)
     graft.operators.Snapshot.write(
       TilePyramid.pyramidLazy(imgs, 4, 6), root, "r1", buildTs = 7L)

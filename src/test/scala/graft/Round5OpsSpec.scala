@@ -295,8 +295,7 @@ class Round5OpsSpec extends SparkFunSuite {
   }
 
   test("merge-on-read: identity without deletes, composition with two") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-mor-spec").toString
+    val root = tempDir("graft-mor-spec")
     val tiles = Images.images(spark, SparkSpec.Sf)
       .withColumn("cell", G.cell_encode(col("lat"), col("lon"), 6))
       .groupBy("cell").agg(count(lit(1)).as("cnt"))

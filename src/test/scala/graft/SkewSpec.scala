@@ -27,7 +27,7 @@ class SkewSpec extends SparkFunSuite {
 
   test("stats-driven decision: no histogram pass in the plan, output identical") {
     import graft.operators.Snapshot
-    val root = java.nio.file.Files.createTempDirectory("graft-skew-stats").toString
+    val root = tempDir("graft-skew-stats")
     Snapshot.write(
       TilePyramid.leafTiles(Images.images(spark, SparkSpec.Sf), 12),
       root, "stats", buildTs = 1L)

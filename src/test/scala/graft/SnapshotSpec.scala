@@ -23,7 +23,7 @@ class SnapshotSpec extends SparkFunSuite {
       .toSet
 
   test("snapshot round-trip + rebuild-from-leaves reproduces the pyramid") {
-    val root = Files.createTempDirectory("graft-snap-spec").toString
+    val root = tempDir("graft-snap-spec")
     val (pyr, counts) = TilePyramid.build(images, 8, 12)
     val manifest = Snapshot.write(pyr, root, "snapA", buildTs = 7L)
     assert(manifest == counts, "manifest counts must match build counts")
@@ -39,7 +39,7 @@ class SnapshotSpec extends SparkFunSuite {
   }
 
   test("versioned snapshots: time travel, isolation, manifest listing") {
-    val root = Files.createTempDirectory("graft-snap-tt").toString
+    val root = tempDir("graft-snap-tt")
     val v1src = TilePyramid.leafTiles(
       images.filter(col("phash") % 2 === 0), 8)
     val v2src = TilePyramid.leafTiles(images, 8)
@@ -76,7 +76,7 @@ class SnapshotSpec extends SparkFunSuite {
     // have no old tile at any level
     val cell5 = graft.geo.functions.cell_encode(col("lat"), col("lon"), 5)
     Seq(col("phash") % 4 =!= 0, cell5 % 2 === 0).foreach { inBase =>
-      val root = Files.createTempDirectory("graft-snap-delta").toString
+      val root = tempDir("graft-snap-delta")
       val base = images.filter(inBase)
       val delta = images.filter(!inBase)
       assert(!base.isEmpty && !delta.isEmpty, s"degenerate split $inBase")
@@ -105,7 +105,7 @@ class SnapshotSpec extends SparkFunSuite {
 
   test("expiry: keepLast/olderThan retention, newest always survives, " +
     "manifest-first crash order is recovered") {
-    val root = Files.createTempDirectory("graft-snap-expire").toString
+    val root = tempDir("graft-snap-expire")
     val tiles = TilePyramid.leafTiles(images, 8)
     Snapshot.writeVersioned(tiles, root, "e1", buildTs = 10L)
     Snapshot.writeVersioned(tiles, root, "e2", buildTs = 20L)
@@ -150,7 +150,7 @@ class SnapshotSpec extends SparkFunSuite {
   }
 
   test("compaction rewrites a fragmented version to few files, losslessly") {
-    val root = Files.createTempDirectory("graft-snap-compact").toString
+    val root = tempDir("graft-snap-compact")
     val tiles = TilePyramid.leafTiles(images, 8)
     // fragment the version the way a micro-batch writer would
     Snapshot.writeVersioned(tiles.repartition(16), root, "f1", buildTs = 1L)
@@ -194,7 +194,7 @@ class SnapshotSpec extends SparkFunSuite {
   }
 
   test("versioned commit point: half-commits are unreadable and retry-safe") {
-    val root = Files.createTempDirectory("graft-snap-crash").toString
+    val root = tempDir("graft-snap-crash")
     val src = TilePyramid.leafTiles(images, 8)
     val n = src.count()
     // simulate a crash AFTER the data job but BEFORE the manifest: data
@@ -226,7 +226,7 @@ class SnapshotSpec extends SparkFunSuite {
   }
 
   test("level read is partition-pruned (res is a partition dir)") {
-    val root = Files.createTempDirectory("graft-snap-prune").toString
+    val root = tempDir("graft-snap-prune")
     Snapshot.write(TilePyramid.build(images, 10, 12)._1, root, "snapB", 1L)
     val dirs = new java.io.File(s"$root/tiles").listFiles().map(_.getName).toSet
     assert(Set("res=10", "res=11", "res=12").subsetOf(dirs))
@@ -237,7 +237,7 @@ class SnapshotSpec extends SparkFunSuite {
   }
 
   test("schema migration on read adds missing columns with defaults only") {
-    val root = Files.createTempDirectory("graft-snap-mig").toString
+    val root = tempDir("graft-snap-mig")
     // simulate an old-engine snapshot that predates the bytes_sum column
     val old = TilePyramid.leafTiles(images, 9).drop("bytes_sum")
     Snapshot.write(old, root, "oldv", 3L)
@@ -255,7 +255,7 @@ class SnapshotSpec extends SparkFunSuite {
   }
 
   test("stats transfer merges source counts with 0-defaults and persists") {
-    val tmp = Files.createTempDirectory("graft-snap-xfer").toString
+    val tmp = tempDir("graft-snap-xfer")
     // md5 split: spatially uncorrelated (a k-parity split puts the halves
     // in DISJOINT cells — the LCG's Marsaglia-lattice structure alternates
     // parities along its lattice lines)
@@ -280,7 +280,7 @@ class SnapshotSpec extends SparkFunSuite {
   }
 
   test("lineage metrics cover every level and sum to image count") {
-    val root = Files.createTempDirectory("graft-snap-lin").toString
+    val root = tempDir("graft-snap-lin")
     Snapshot.write(TilePyramid.build(images, 10, 12)._1, root, "snapC", 2L)
     val lm = Snapshot.lineageMetrics(spark, root)
     val perRes = lm.groupBy(col("res")).agg(sum(col("n_images")).as("n"))
@@ -294,7 +294,7 @@ class SnapshotSpec extends SparkFunSuite {
   test("partition evolution: v2 adds a partition column without rewriting " +
     "v1; readEvolved spans both layouts; the new column prunes v2") {
     import graft.geo.{functions => G}
-    val root = Files.createTempDirectory("graft-snap-pe").toString
+    val root = tempDir("graft-snap-pe")
     val leaves = TilePyramid.leafTiles(images, 6)
       .select("cell", "cnt", "res")
       .persist()
@@ -339,7 +339,7 @@ class SnapshotSpec extends SparkFunSuite {
   }
 
   test("named refs: set/resolve/list, atomic retag, dangling ref fails loud") {
-    val root = Files.createTempDirectory("graft-ref-spec").toString
+    val root = tempDir("graft-ref-spec")
     val tiles = TilePyramid.withCell(images, 6)
       .groupBy("cell").agg(count(lit(1)).as("cnt"))
       .withColumn("res", lit(6))
@@ -374,7 +374,7 @@ class SnapshotSpec extends SparkFunSuite {
 
   test("orphan files: uncommitted version dirs and scratch are flagged, " +
       "committed data survives removal") {
-    val root = Files.createTempDirectory("graft-orphan-spec").toString
+    val root = tempDir("graft-orphan-spec")
     val tiles = TilePyramid.withCell(images, 6)
       .groupBy("cell").agg(count(lit(1)).as("cnt"))
       .withColumn("res", lit(6))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -25,8 +23,8 @@ class StreamingSpec extends SparkFunSuite {
   }
 
   test("streaming leaf tiles == batch leaf tiles, incrementally") {
-    val inDir = Files.createTempDirectory("graft-stream-in").toString
-    val ckpt = Files.createTempDirectory("graft-stream-ck").toString
+    val inDir = tempDir("graft-stream-in")
+    val ckpt = tempDir("graft-stream-ck")
     val imgs = Images.images(spark, SparkSpec.Sf)
       .select("image_id", "lat", "lon", "w", "h", "phash")
 
@@ -51,8 +49,8 @@ class StreamingSpec extends SparkFunSuite {
 
   test("streaming HLL registers == batch register table, across a resume; " +
       "state bounded at 256") {
-    val inDir = Files.createTempDirectory("graft-hllreg-in").toString
-    val ckpt = Files.createTempDirectory("graft-hllreg-ck").toString
+    val inDir = tempDir("graft-hllreg-in")
+    val ckpt = tempDir("graft-hllreg-ck")
     val imgs = Images.images(spark, SparkSpec.Sf)
       .select("image_id", "lat", "lon", "w", "h", "phash")
     imgs.filter(col("phash") % 2 === 0).write.mode("append").parquet(inDir)
@@ -70,9 +68,9 @@ class StreamingSpec extends SparkFunSuite {
   }
 
   test("streaming IVF assignment == batch 1-NN assignment, across a resume") {
-    val inDir = Files.createTempDirectory("graft-ivfs-in").toString
-    val ckpt = Files.createTempDirectory("graft-ivfs-ck").toString
-    val outDir = Files.createTempDirectory("graft-ivfs-out").toString
+    val inDir = tempDir("graft-ivfs-in")
+    val ckpt = tempDir("graft-ivfs-ck")
+    val outDir = tempDir("graft-ivfs-out")
     val cb = graft.similarity.Ann.codebook(spark, SparkSpec.Sf)
     def run(): Unit = {
       val q = StreamingTiles.ivfAssignStream(spark, inDir, cb)
@@ -106,12 +104,12 @@ class StreamingSpec extends SparkFunSuite {
   }
 
   test("streaming exact dedup == batch distinct keys, across a resume") {
-    val inDir = Files.createTempDirectory("graft-dedup-in").toString
-    val ckpt = Files.createTempDirectory("graft-dedup-ck").toString
+    val inDir = tempDir("graft-dedup-in")
+    val ckpt = tempDir("graft-dedup-ck")
     val evs = spark.read.parquet(s"${SparkSpec.Sf}/events.parquet")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
 
-    val outDir = Files.createTempDirectory("graft-dedup-out").toString
+    val outDir = tempDir("graft-dedup-out")
     def run(): Unit = {
       // append-mode resume needs a fault-tolerant sink (memory sink
       // cannot recover from a checkpoint) — same device as the
@@ -140,8 +138,8 @@ class StreamingSpec extends SparkFunSuite {
   }
 
   test("streaming pyramid (all levels) == batch pyramid, across a resume") {
-    val inDir = Files.createTempDirectory("graft-stream-pyr").toString
-    val ckpt = Files.createTempDirectory("graft-stream-pyrck").toString
+    val inDir = tempDir("graft-stream-pyr")
+    val ckpt = tempDir("graft-stream-pyrck")
     val imgs = Images.images(spark, SparkSpec.Sf)
       .select("image_id", "lat", "lon", "w", "h", "phash")
 
@@ -171,8 +169,8 @@ class StreamingSpec extends SparkFunSuite {
   }
 
   test("streaming sessionization (custom state) == batch sessions sans open") {
-    val inDir = Files.createTempDirectory("graft-stream-sess").toString
-    val ckpt = Files.createTempDirectory("graft-stream-sessck").toString
+    val inDir = tempDir("graft-stream-sess")
+    val ckpt = tempDir("graft-stream-sessck")
     val ev = spark.read.parquet(s"${SparkSpec.Sf}/events.parquet")
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts").cast("timestamp")).as("t"))
@@ -186,7 +184,7 @@ class StreamingSpec extends SparkFunSuite {
         .coalesce(1).write.mode("append").parquet(inDir)
     // append-mode memory sinks cannot recover from a checkpoint; a parquet
     // sink gives the real exactly-once resume semantics
-    val outDir = Files.createTempDirectory("graft-stream-sessout").toString
+    val outDir = tempDir("graft-stream-sessout")
     def runToParquet(): Unit = {
       val q = StreamingTiles.sessionStream(spark, inDir).writeStream
         .format("parquet").option("path", outDir)
@@ -230,9 +228,9 @@ class StreamingSpec extends SparkFunSuite {
     // older event time merges into the open session, widening its
     // envelope — it does NOT retro-split or rejoin sessions closed
     // earlier, which is where this diverges from the batch sessionizer.
-    val inDir = Files.createTempDirectory("graft-stream-late").toString
-    val ckpt = Files.createTempDirectory("graft-stream-lateck").toString
-    val outDir = Files.createTempDirectory("graft-stream-lateout").toString
+    val inDir = tempDir("graft-stream-late")
+    val ckpt = tempDir("graft-stream-lateck")
+    val outDir = tempDir("graft-stream-lateout")
     val Min = 60000000L // one minute in micros
     def dump(events: Seq[(Long, Long)]): Unit = { // (event_id, t_us)
       import spark.implicits._
@@ -268,9 +266,9 @@ class StreamingSpec extends SparkFunSuite {
     // The same scenario where sessionStream's at-ingest-order contract
     // diverges (previous test): with the watermark+buffer sessionizer the
     // late 10min event lands in session 1 exactly as the batch walk does.
-    val inDir = Files.createTempDirectory("graft-stream-exact").toString
-    val ckpt = Files.createTempDirectory("graft-stream-exactck").toString
-    val outDir = Files.createTempDirectory("graft-stream-exactout").toString
+    val inDir = tempDir("graft-stream-exact")
+    val ckpt = tempDir("graft-stream-exactck")
+    val outDir = tempDir("graft-stream-exactout")
     val Min = 60000000L
     def dump(events: Seq[(Long, Long)]): Unit = {
       import spark.implicits._
@@ -374,9 +372,9 @@ class StreamingSpec extends SparkFunSuite {
   }
 
   test("stream-static pip join == batch pip join, across a resume") {
-    val inDir = Files.createTempDirectory("graft-stream-pip").toString
-    val ckpt = Files.createTempDirectory("graft-stream-pipck").toString
-    val outDir = Files.createTempDirectory("graft-stream-pipout").toString
+    val inDir = tempDir("graft-stream-pip")
+    val ckpt = tempDir("graft-stream-pipck")
+    val outDir = tempDir("graft-stream-pipout")
     val imgs = Images.images(spark, SparkSpec.Sf)
       .select("image_id", "lat", "lon", "w", "h", "phash")
     def run(): Unit = {
@@ -404,9 +402,9 @@ class StreamingSpec extends SparkFunSuite {
 
   test("streaming snapshot maintenance: versioned merge == batch; idempotent") {
     import graft.operators.{Snapshot, TilePyramid}
-    val inDir = Files.createTempDirectory("graft-snapm-in").toString
-    val ckpt = Files.createTempDirectory("graft-snapm-ck").toString
-    val root = Files.createTempDirectory("graft-snapm-root").toString
+    val inDir = tempDir("graft-snapm-in")
+    val ckpt = tempDir("graft-snapm-ck")
+    val root = tempDir("graft-snapm-root")
     val imgs = Images.images(spark, SparkSpec.Sf)
       .select("image_id", "lat", "lon", "w", "h", "phash")
     def run(): Unit = StreamingTiles
@@ -442,9 +440,9 @@ class StreamingSpec extends SparkFunSuite {
   }
 
   test("streaming PQ encoding == batch codes, across a resume") {
-    val inDir = Files.createTempDirectory("graft-pq-in").toString
-    val ckpt = Files.createTempDirectory("graft-pq-ck").toString
-    val outDir = Files.createTempDirectory("graft-pq-out").toString
+    val inDir = tempDir("graft-pq-in")
+    val ckpt = tempDir("graft-pq-ck")
+    val outDir = tempDir("graft-pq-out")
     val cb = graft.similarity.Ann.pqCodebook(spark, SparkSpec.Sf)
     def run(): Unit = {
       val q = StreamingTiles.pqEncodeStream(spark, inDir, cb)
@@ -474,9 +472,9 @@ class StreamingSpec extends SparkFunSuite {
       .map(r => (r.getAs[Long]("ai"), r.getAs[Long]("bi")) -> r.getAs[Double]("cos"))
       .toMap
     def run(horizon: Long): Map[(Long, Long), Double] = {
-      val inDir = Files.createTempDirectory("graft-nd-in").toString
-      val ckpt = Files.createTempDirectory("graft-nd-ck").toString
-      val outDir = Files.createTempDirectory("graft-nd-out").toString
+      val inDir = tempDir("graft-nd-in")
+      val ckpt = tempDir("graft-nd-ck")
+      val outDir = tempDir("graft-nd-out")
       def go(): Unit = {
         val q = StreamingTiles.nearDupStream(spark, inDir, 0.4, horizon)
           .writeStream.format("parquet").option("path", outDir)
@@ -528,9 +526,9 @@ class StreamingSpec extends SparkFunSuite {
     val lateId = inHorizon.keys.flatMap(p => Seq(p._1, p._2))
       .filter(_ < 120).minOption
       .getOrElse(fail("fixture has no in-horizon pair member < 120"))
-    val inDir = Files.createTempDirectory("graft-ndl-in").toString
-    val ckpt = Files.createTempDirectory("graft-ndl-ck").toString
-    val outDir = Files.createTempDirectory("graft-ndl-out").toString
+    val inDir = tempDir("graft-ndl-in")
+    val ckpt = tempDir("graft-ndl-ck")
+    val outDir = tempDir("graft-ndl-out")
     def go(): Long = {
       val q = StreamingTiles.nearDupStream(spark, inDir, 0.4, horizon)
         .writeStream.format("parquet").option("path", outDir)
@@ -565,9 +563,9 @@ class StreamingSpec extends SparkFunSuite {
     // bound. This asserts eviction EMPIRICALLY: feed 4 event-time-advancing
     // increments; join state must (a) actually remove rows and (b) plateau.
     val emb = spark.read.parquet(s"${SparkSpec.Sf}/embeddings.parquet")
-    val inDir = Files.createTempDirectory("graft-nde-in").toString
-    val ckpt = Files.createTempDirectory("graft-nde-ck").toString
-    val outDir = Files.createTempDirectory("graft-nde-out").toString
+    val inDir = tempDir("graft-nde-in")
+    val ckpt = tempDir("graft-nde-ck")
+    val outDir = tempDir("graft-nde-out")
     def go(): (Long, Long) = {
       val q = StreamingTiles.nearDupStream(spark, inDir, 0.4, 30L)
         .writeStream.format("parquet").option("path", outDir)
@@ -593,8 +591,8 @@ class StreamingSpec extends SparkFunSuite {
   }
 
   test("streaming postings == batch inverted index, across a resume") {
-    val inDir = Files.createTempDirectory("graft-post-in").toString
-    val ckpt = Files.createTempDirectory("graft-post-ck").toString
+    val inDir = tempDir("graft-post-in")
+    val ckpt = tempDir("graft-post-ck")
     val docs = spark.read.parquet(s"${SparkSpec.Sf}/documents.parquet")
 
     def run(): Unit = runAvailableNow(
@@ -626,9 +624,9 @@ class StreamingSpec extends SparkFunSuite {
   }
 
   test("stream-stream interval join == batch pairs, across a time-split resume") {
-    val inDir = Files.createTempDirectory("graft-ivj-in").toString
-    val ckpt = Files.createTempDirectory("graft-ivj-ck").toString
-    val outDir = Files.createTempDirectory("graft-ivj-out").toString
+    val inDir = tempDir("graft-ivj-in")
+    val ckpt = tempDir("graft-ivj-ck")
+    val outDir = tempDir("graft-ivj-out")
     val ev = spark.read.parquet(s"${SparkSpec.Sf}/events.parquet")
     // independent batch recomputation: the direct theta join
     val ivB = ev.filter(col("event_type") === "error")
@@ -672,8 +670,8 @@ class StreamingSpec extends SparkFunSuite {
   }
 
   test("streaming event windows == batch windows") {
-    val inDir = Files.createTempDirectory("graft-stream-ev").toString
-    val ckpt = Files.createTempDirectory("graft-stream-evck").toString
+    val inDir = tempDir("graft-stream-ev")
+    val ckpt = tempDir("graft-stream-evck")
     spark.read.parquet(s"${SparkSpec.Sf}/events.parquet")
       .write.mode("append").parquet(inDir)
     runAvailableNow(StreamingTiles.eventWindowStream(spark, inDir), "ev_win", ckpt)
@@ -691,9 +689,9 @@ class StreamingSpec extends SparkFunSuite {
 
   test("streaming trajectory rasterization == driver path replay across " +
       "a time-split resume") {
-    val inDir = Files.createTempDirectory("graft-stream-traj").toString
-    val ckpt = Files.createTempDirectory("graft-stream-trajck").toString
-    val outDir = Files.createTempDirectory("graft-stream-trajout").toString
+    val inDir = tempDir("graft-stream-traj")
+    val ckpt = tempDir("graft-stream-trajck")
+    val outDir = tempDir("graft-stream-trajout")
     val ts = spark.read.parquet(s"${SparkSpec.Sf}/events.parquet")
       .select(unix_micros(col("ts").cast("timestamp")).as("t"))
       .orderBy(col("t")).collect().map(_.getLong(0))
@@ -747,9 +745,9 @@ class StreamingSpec extends SparkFunSuite {
 
   test("streaming OD-flow facts match the batch OD matrix across a " +
       "time-split resume") {
-    val inDir = Files.createTempDirectory("graft-stream-od").toString
-    val ckpt = Files.createTempDirectory("graft-stream-odck").toString
-    val outDir = Files.createTempDirectory("graft-stream-odout").toString
+    val inDir = tempDir("graft-stream-od")
+    val ckpt = tempDir("graft-stream-odck")
+    val outDir = tempDir("graft-stream-odout")
     val ts = spark.read.parquet(s"${SparkSpec.Sf}/events.parquet")
       .select(unix_micros(col("ts").cast("timestamp")).as("t"))
       .orderBy(col("t")).collect().map(_.getLong(0))
@@ -786,9 +784,9 @@ class StreamingSpec extends SparkFunSuite {
 
   test("streaming stay-points == batch runs minus each user's open run " +
       "across a time-split resume") {
-    val inDir = Files.createTempDirectory("graft-stream-stay").toString
-    val ckpt = Files.createTempDirectory("graft-stream-stayck").toString
-    val outDir = Files.createTempDirectory("graft-stream-stayout").toString
+    val inDir = tempDir("graft-stream-stay")
+    val ckpt = tempDir("graft-stream-stayck")
+    val outDir = tempDir("graft-stream-stayout")
     val ts = spark.read.parquet(s"${SparkSpec.Sf}/events.parquet")
       .select(unix_micros(col("ts").cast("timestamp")).as("t"))
       .orderBy(col("t")).collect().map(_.getLong(0))
@@ -837,9 +835,9 @@ class StreamingSpec extends SparkFunSuite {
 
   test("streaming funnel: late-arriving earlier signup is folded exactly; " +
     "each stage emitted once") {
-    val inDir = Files.createTempDirectory("graft-funnel-in").toString
-    val ckpt = Files.createTempDirectory("graft-funnel-ck").toString
-    val outDir = Files.createTempDirectory("graft-funnel-out").toString
+    val inDir = tempDir("graft-funnel-in")
+    val ckpt = tempDir("graft-funnel-ck")
+    val outDir = tempDir("graft-funnel-out")
     val Min = 60000000L
     val B = 1000 * Min
     def dump(events: Seq[(Long, Long, String, Long)]): Unit = {

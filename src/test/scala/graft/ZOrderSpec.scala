@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -44,7 +42,7 @@ class ZOrderSpec extends SparkFunSuite {
   }
 
   test("z-sorted layout skips row groups a round-robin layout reads") {
-    val tmp = Files.createTempDirectory("graft-zorder").toString
+    val tmp = tempDir("graft-zorder")
     val imgs = Images.images(spark, SparkSpec.Sf)
       .select(col("image_id"), col("lat"), col("lon"))
       .withColumn("z", G.cell_zvalue(G.cell_encode(col("lat"), col("lon"), 12)))
@@ -153,7 +151,7 @@ class ZOrderSpec extends SparkFunSuite {
   }
 
   test("hilbert-sorted layout skips row groups like the z layout") {
-    val tmp = Files.createTempDirectory("graft-hilbert").toString
+    val tmp = tempDir("graft-hilbert")
     val imgs = Images.images(spark, SparkSpec.Sf)
       .select(col("image_id"), col("lat"), col("lon"))
       .withColumn("hd", G.cell_hvalue(G.cell_encode(col("lat"), col("lon"), 12)))
