@@ -3,21 +3,31 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Snapshot, TilePyramid}
+import graft.operators.{Snapshot, SpatialJoin, TilePyramid}
 import graft.sources.{Fixtures, Images}
 
-/** The plan properties a signature line (src/test/resources/
-  * plan_signatures.txt, [[SignatureSpec]]) cannot express: which columns
-  * the scan reads, that merge and resume plans do not grow with the level
-  * count, the join shape of the kNN and descent candidate stages (built
-  * here, inside operators that checkpoint them), and which filters the
-  * optimizer pushes below the dhash kernel. */
+/** Physical-plan audits, one named property each. A signature line
+  * (src/test/resources/plan_signatures.txt, [[SignatureSpec]]) pins a
+  * registry query's whole plan shape; the cases here state why a shape
+  * matters (small sides broadcast, aggregates are partial+final, hot paths
+  * stay inside WholeStageCodegen) and cover what a line cannot express:
+  * which columns the scan reads, that merge and resume plans do not grow
+  * with the level count, the join shape of the kNN and descent candidate
+  * stages (built here, inside operators that checkpoint them), and which
+  * filters the optimizer pushes below the dhash kernel. */
 class PlanSpec extends SparkFunSuite {
 
   private def imgs = Images.images(spark, SparkSpec.Sf)
 
   private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** AQE materializes WholeStageCodegen spans only in the FINAL plan —
+    * run the query, then read the adapted plan. */
+  private def finalPlanOf(df: DataFrame): String = {
+    df.collect()
+    df.queryExecution.executedPlan.toString
+  }
 
   test("images scan prunes to the two key columns of lineitem") {
     val plan = planOf(imgs)
@@ -27,6 +37,24 @@ class PlanSpec extends SparkFunSuite {
     val readSchema = scanLine.substring(scanLine.indexOf("ReadSchema"))
     assert(!readSchema.contains("l_quantity") && !readSchema.contains("l_comment"),
       s"scan reads more than the key columns: $readSchema")
+  }
+
+  test("pip join: broadcast prefilter + codegen refine, no image-side shuffle") {
+    val df = SpatialJoin.pipJoin(imgs, spark)
+    val plan = finalPlanOf(df)
+    assert(plan.contains("BroadcastHashJoin"), "covering index must broadcast")
+    assert(!plan.contains("SortMergeJoin"), "image side must not shuffle-join")
+    assert(plan.contains("point_in_poly"), "refine predicate present")
+    assert(plan.contains("WholeStageCodegen") || plan.contains("*("), "hot path must be codegen'd")
+  }
+
+  test("tile rollup: partial + final hash aggregation around one exchange") {
+    val plan = planOf(TilePyramid.leafTiles(imgs, 10))
+    val partials = plan.linesIterator.count(l =>
+      l.contains("HashAggregate") && l.contains("partial_"))
+    assert(partials > 0, "map-side combine missing")
+    assert(plan.contains("Exchange hashpartitioning(cell"),
+      "rollup must shuffle on the cell key")
   }
 
   test("pyramid: every level from one aggregation, one cell exchange") {
@@ -79,6 +107,21 @@ class PlanSpec extends SparkFunSuite {
     assert(planOf(joined).contains("BroadcastHashJoin"))
   }
 
+  test("embedding near-dup plan has no nested-loop pair generator") {
+    val df = graft.similarity.Ann.lshCosNearDupPairs(spark, SparkSpec.Sf, 0.4)
+    val plan = planOf(df)
+    assert(!plan.contains("CartesianProduct"), "cartesian pair generator")
+    assert(!plan.contains("BroadcastNestedLoopJoin"), "theta-join pair generator")
+  }
+
+  test("interval join is a bucket equi-join, never a theta join") {
+    val df = graft.Queries.queryMap("q_interval_join")(spark, SparkSpec.Sf)
+    val plan = planOf(df)
+    assert(!plan.contains("CartesianProduct"), "cartesian range join")
+    assert(!plan.contains("BroadcastNestedLoopJoin"), "theta range join")
+    assert(plan.contains("bucket"), "bucket key must drive the join")
+  }
+
   test("descent child join is a broadcast equi-join on the parent cell") {
     // The operator localCheckpoints each level (so its executed plan shows
     // RDD scans); assert the join SHAPE on the candidate stage it builds:
@@ -98,6 +141,41 @@ class PlanSpec extends SparkFunSuite {
       !plan.contains("CartesianProduct"))
   }
 
+  test("chunk rows is map-only: no exchange below the generator") {
+    val df = Queries.queryMap("q_chunk_rows")(spark, SparkSpec.Sf)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("Generate"), "posexplode missing")
+    assert(!plan.contains("Exchange"),
+      s"chunking must not shuffle — chunk rows are produced at scan speed:\n$plan")
+  }
+
+  test("trajectory raster: map-side generator, no join, only keyed " +
+      "exchanges (user window + distinct-agg rollup)") {
+    val df = Queries.queryMap("q_traj_raster")(spark, SparkSpec.Sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("Generate"), "line_cells explode missing")
+    assert(!plan.contains("Join"),
+      s"rasterization must be a generator, not a join:\n$plan")
+    // 1 user-window exchange + the count(DISTINCT user) rollup's
+    // two-phase (cell,user)->(cell) exchanges; nothing else may shuffle
+    // (in particular nothing proportional to the exploded cell facts
+    // beyond the keyed rollup itself)
+    val nEx = "Exchange hashpartitioning".r.findAllIn(plan).length
+    assert(nEx <= 4,
+      s"unexpected extra shuffles in the rasterization plan ($nEx):\n$plan")
+  }
+
+  test("isolation query is keyed anti-join work, never a theta anti-join") {
+    val df = Queries.queryMap("q_isolated")(spark, SparkSpec.Sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("LeftAnti"), "left-anti hit subtraction missing")
+    assert(!plan.contains("BroadcastNestedLoopJoin") &&
+      !plan.contains("CartesianProduct"),
+      s"isolation must stay equi-keyed:\n$plan")
+  }
+
   test("image near-dup evaluates the dhash kernel once per side") {
     // InferFiltersFromConstraints would push isnotnull(dhash56(...)) below
     // the dedup aggregates and re-run the dominant kernel on every
@@ -108,5 +186,12 @@ class PlanSpec extends SparkFunSuite {
       assert(!f.contains("dhash56"),
         s"dhash kernel evaluated inside a pushed filter:\n$f")
     }
+  }
+
+  test("cell_encode stays inside codegen (no fallback marker)") {
+    val df = imgs.select(graft.geo.functions.cell_encode(
+      col("lat"), col("lon"), 8).as("cell"))
+    val plan = finalPlanOf(df)
+    assert(plan.contains("WholeStageCodegen") || plan.contains("*("))
   }
 }
